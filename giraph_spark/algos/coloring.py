@@ -58,6 +58,7 @@ def graph_coloring(
 
     Deterministic: the result is the greedy sequential coloring in
     ``md5(id)`` order, independent of partitioning or scheduling.
+    ``stats``, if given, records ``rounds`` and ``per_round`` rows.
     """
     id_col, src, dst = graph.id_col, graph.src_col, graph.dst_col
     uncolored = F.col("_color").isNull()
@@ -68,7 +69,7 @@ def graph_coloring(
     spri = F.md5(F.col(src).cast("string"))
     dpri = F.md5(F.col(dst).cast("string"))
 
-    with LoopGear(graph.vertices.sparkSession) as gear:
+    with LoopGear(graph.vertices.sparkSession, stats=stats) as gear:
         # the uncolored count rides every checkpoint materialization —
         # one action per frame per wave (SURVEY §4.7), doubling as the
         # gear/broadcast signal
@@ -96,9 +97,7 @@ def graph_coloring(
         for rnd in range(max_rounds):
             if n_unc == 0:
                 break
-            gear.resize(est_live)
-            if stats is not None:
-                stats["rounds"] = rnd + 1
+            gear.round(est_live)
             # per-uncolored-vertex wave aggregate over its neighbors'
             # (inline priority, joined color): blocked by any uncolored
             # smaller-priority neighbor; colors taken by smaller-
@@ -171,12 +170,10 @@ def graph_coloring(
             # is known exactly (prev_unc − n_unc) before the job runs.
             # Lazy checkpoint — materialized by the next wave's state
             # job, costing no action of its own
-            delta = state.where("_just").select(F.col(id_col).alias(dst))
+            delta = state.where("_just").select(id_col)
             state = state.drop("_just")
-            live = live.join(
-                bcast_if_small(delta, prev_unc - n_unc),
-                on=dst,
-                how="left_anti",
-            ).localCheckpoint(eager=False)
+            live = gear.peel(live, delta, prev_unc - n_unc, dst).localCheckpoint(
+                eager=False
+            )
             est_live = -(-n_live0 * n_unc // max(n_v, 1))
         return state.select(id_col, F.col("_color").alias(color_col))

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from ..graph import Graph
 from ..pregel import MSG, PregelMetrics, pregel
 from ..plans.checkpoint import fresh_checkpoint
+from ..plans.gear import LoopGear
 
 
 def _label_propagation(
@@ -334,44 +335,61 @@ def k_core(
     localCheckpoint-truncated like every other iterative loop in the
     engine. Returns the surviving ``(id,)`` rows.
     """
+    return _peel_to_fixpoint(
+        graph, "k_core", [], F.count(F.lit(1)), k, max_rounds
+    )
+
+
+def _peel_to_fixpoint(
+    graph: Graph,
+    name: str,
+    edge_cols: list[Column],
+    agg: Column,
+    bound: float,
+    max_rounds: int,
+) -> DataFrame:
+    """The k-core / s-core peel: repeatedly keep the vertices whose
+    ``agg`` over their out-edges within the survivors (``edge_cols``
+    carried alongside ``s``, ``d``; 0 for a vertex with none) is ≥
+    ``bound``, until the survivor count is stable. Raises if
+    ``max_rounds`` is exhausted first."""
     id_col, src_col, dst_col = graph.id_col, graph.src_col, graph.dst_col
-    e0 = graph.edges.select(
-        F.col(src_col).cast("long").alias("s"), F.col(dst_col).cast("long").alias("d")
-    ).persist()
-    remaining = graph.vertices.select(
-        F.col(id_col).cast("long").alias("id")
-    ).localCheckpoint(eager=True)
-    n_prev = remaining.count()
-    stable = False
-    for _ in range(max_rounds):
-        e = e0.join(
-            remaining.select(F.col("id").alias("s")), "s", "left_semi"
-        ).join(remaining.select(F.col("id").alias("d")), "d", "left_semi")
-        deg = (
-            e.select(F.col("s").alias("id"))
-            .groupBy("id")
-            .agg(F.count(F.lit(1)).alias("_deg"))
+    with LoopGear(graph.vertices.sparkSession, window=False) as gear:
+        e0 = gear.persist(
+            graph.edges.select(
+                F.col(src_col).cast("long").alias("s"),
+                F.col(dst_col).cast("long").alias("d"),
+                *edge_cols,
+            )
         )
-        survivors = (
-            remaining.join(deg, "id", "left")
-            .where(F.coalesce(F.col("_deg"), F.lit(0)) >= k)
-            .select("id")
-            .localCheckpoint(eager=True)
-        )
-        n = survivors.count()
-        remaining = survivors
-        if n == n_prev:
-            stable = True
-            break
-        n_prev = n
-    e0.unpersist()
-    if not stable:
-        # an un-peeled exit returns a SUPERSET of the k-core, silently
-        raise RuntimeError(
-            f"k_core: peeling did not stabilize within max_rounds="
-            f"{max_rounds}; raise max_rounds (needed rounds = peeling depth)"
-        )
-    return remaining
+        remaining = graph.vertices.select(
+            F.col(id_col).cast("long").alias("id")
+        ).localCheckpoint(eager=True)
+        n_prev = remaining.count()
+        for _ in range(max_rounds):
+            e = e0.join(
+                remaining.select(F.col("id").alias("s")), "s", "left_semi"
+            ).join(remaining.select(F.col("id").alias("d")), "d", "left_semi")
+            per_v = (
+                e.select(F.col("s").alias("id"), *e0.columns[2:])
+                .groupBy("id")
+                .agg(agg.alias("_agg"))
+            )
+            remaining = (
+                remaining.join(per_v, "id", "left")
+                .where(F.coalesce(F.col("_agg"), F.lit(0)) >= bound)
+                .select("id")
+                .localCheckpoint(eager=True)
+            )
+            n = remaining.count()
+            if n == n_prev:
+                return remaining
+            n_prev = n
+    # an un-peeled exit returns a SUPERSET of the core, silently
+    raise RuntimeError(
+        f"{name}: peeling did not stabilize within max_rounds="
+        f"{max_rounds}; raise max_rounds (needed rounds = peeling depth)"
+    )
 
 
 def s_core(
@@ -394,45 +412,14 @@ def s_core(
     survivor set localCheckpoint-truncated, loud failure on an
     un-stabilized exit (a silent exit would return a SUPERSET of the
     s-core). Returns the surviving ``(id,)`` rows."""
-    id_col, src_col, dst_col = graph.id_col, graph.src_col, graph.dst_col
-    e0 = graph.edges.select(
-        F.col(src_col).cast("long").alias("s"),
-        F.col(dst_col).cast("long").alias("d"),
-        F.col(weight_col).cast("double").alias("w"),
-    ).persist()
-    remaining = graph.vertices.select(
-        F.col(id_col).cast("long").alias("id")
-    ).localCheckpoint(eager=True)
-    n_prev = remaining.count()
-    stable = False
-    for _ in range(max_rounds):
-        e = e0.join(
-            remaining.select(F.col("id").alias("s")), "s", "left_semi"
-        ).join(remaining.select(F.col("id").alias("d")), "d", "left_semi")
-        strength = (
-            e.select(F.col("s").alias("id"), "w")
-            .groupBy("id")
-            .agg(F.sum("w").alias("_st"))
-        )
-        survivors = (
-            remaining.join(strength, "id", "left")
-            .where(F.coalesce(F.col("_st"), F.lit(0.0)) >= s)
-            .select("id")
-            .localCheckpoint(eager=True)
-        )
-        n = survivors.count()
-        remaining = survivors
-        if n == n_prev:
-            stable = True
-            break
-        n_prev = n
-    e0.unpersist()
-    if not stable:
-        raise RuntimeError(
-            f"s_core: peeling did not stabilize within max_rounds="
-            f"{max_rounds}; raise max_rounds (needed rounds = peeling depth)"
-        )
-    return remaining
+    return _peel_to_fixpoint(
+        graph,
+        "s_core",
+        [F.col(weight_col).cast("double").alias("w")],
+        F.sum("w"),
+        s,
+        max_rounds,
+    )
 
 
 def core_numbers(

@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import Graph
+from ..plans.gear import LoopGear
 from .paths import bfs
 
 
@@ -52,58 +53,60 @@ def bracha_toueg(
     ``(id, is_free)`` for every vertex (the reference dumps
     ``id<TAB>isFree=...`` for all vertices)."""
     id_col, src_col, dst_col = graph.id_col, graph.src_col, graph.dst_col
-    edges = graph.edges.select(
-        F.col(src_col).alias("src"),
-        F.col(dst_col).alias("dst"),
-        F.col(tag_col).alias("tag"),
-    ).persist()
-
-    # NOTIFY wave = forward reachability from the initiator.
-    notified = (
-        bfs(graph, source=initiator, max_supersteps=max_rounds)
-        .where(F.col("level") >= 0)
-        .select(F.col(id_col).alias("id"))
-        .persist()
-    )
-
-    out_deg = edges.groupBy(F.col("src").alias("id")).count()
-    # total targets per request group (multi-edges to the same target are
-    # distinct requests, matching the reference's per-edge request entries)
-    groups = edges.groupBy("src", "tag").agg(F.count(F.lit(1)).alias("_need")).persist()
-
-    granting = (
-        notified.join(out_deg, on="id", how="left_anti")
-        .where(F.col("id") != F.lit(initiator))
-        .localCheckpoint(eager=True)
-    )
-
-    for _ in range(max_rounds):
-        n_before = granting.count()
-        got = (
-            edges.join(granting, edges.dst == granting.id)
-            .groupBy("src", "tag")
-            .agg(F.count(F.lit(1)).alias("_got"))
+    with LoopGear(graph.vertices.sparkSession, window=False) as gear:
+        edges = gear.persist(
+            graph.edges.select(
+                F.col(src_col).alias("src"),
+                F.col(dst_col).alias("dst"),
+                F.col(tag_col).alias("tag"),
+            )
         )
-        satisfied = (
-            groups.join(got, on=["src", "tag"])
-            .where(F.col("_got") >= F.col("_need"))
-            .select(F.col("src").alias("id"))
-            .distinct()
+
+        # NOTIFY wave = forward reachability from the initiator.
+        notified = gear.persist(
+            bfs(graph, source=initiator, max_supersteps=max_rounds)
+            .where(F.col("level") >= 0)
+            .select(F.col(id_col).alias("id"))
         )
+
+        out_deg = edges.groupBy(F.col("src").alias("id")).count()
+        # total targets per request group (multi-edges to the same target
+        # are distinct requests, matching the reference's per-edge request
+        # entries)
+        groups = gear.persist(
+            edges.groupBy("src", "tag").agg(F.count(F.lit(1)).alias("_need"))
+        )
+
         granting = (
-            granting.unionByName(satisfied).distinct().localCheckpoint(eager=True)
+            notified.join(out_deg, on="id", how="left_anti")
+            .where(F.col("id") != F.lit(initiator))
+            .localCheckpoint(eager=True)
         )
-        if granting.count() == n_before:
-            break
 
-    init_leaf_free = notified.where(
-        (F.col("id") == F.lit(initiator))
-    ).join(out_deg, on="id", how="left_anti")
-    free = granting.unionByName(init_leaf_free).distinct()
+        for _ in range(max_rounds):
+            n_before = granting.count()
+            got = (
+                edges.join(granting, edges.dst == granting.id)
+                .groupBy("src", "tag")
+                .agg(F.count(F.lit(1)).alias("_got"))
+            )
+            satisfied = (
+                groups.join(got, on=["src", "tag"])
+                .where(F.col("_got") >= F.col("_need"))
+                .select(F.col("src").alias("id"))
+                .distinct()
+            )
+            granting = (
+                granting.unionByName(satisfied).distinct().localCheckpoint(eager=True)
+            )
+            if granting.count() == n_before:
+                break
 
-    result = graph.vertices.select(F.col(id_col).alias("id")).join(
-        free.withColumn("is_free", F.lit(True)), on="id", how="left"
-    ).select("id", F.coalesce("is_free", F.lit(False)).alias("is_free"))
-    edges.unpersist()
-    groups.unpersist()
-    return result
+        init_leaf_free = notified.where(
+            (F.col("id") == F.lit(initiator))
+        ).join(out_deg, on="id", how="left_anti")
+        free = granting.unionByName(init_leaf_free).distinct()
+
+        return graph.vertices.select(F.col(id_col).alias("id")).join(
+            free.withColumn("is_free", F.lit(True)), on="id", how="left"
+        ).select("id", F.coalesce("is_free", F.lit(False)).alias("is_free"))

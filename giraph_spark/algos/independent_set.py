@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from ..graph import Graph
 from ..plans.checkpoint import fresh_checkpoint_count
-from ..plans.gear import LoopGear, bcast_if_small
+from ..plans.gear import LoopGear
 
 UNKNOWN, IN_SET, NOT_IN = 0, 1, 2
 
@@ -34,11 +34,12 @@ def maximal_independent_set(
     is two shuffles (neighbor-min + neighbor-of-IN mark). The UNKNOWN
     count rides each round's checkpoint job (one action per round) and
     feeds the shared gear-down (plans/gear.py) as the live set
-    collapses. ``stats``, if given, records ``rounds``."""
+    collapses. ``stats``, if given, records ``rounds`` and
+    ``per_round`` rows."""
     id_col, src, dst = graph.id_col, graph.src_col, graph.dst_col
     unknown = F.col("_st") == UNKNOWN
 
-    with LoopGear(graph.vertices.sparkSession) as gear:
+    with LoopGear(graph.vertices.sparkSession, stats=stats) as gear:
         state, n_v, n_unk = fresh_checkpoint_count(
             graph.vertices.select(
                 id_col,
@@ -64,12 +65,10 @@ def maximal_independent_set(
         # ratio, a width heuristic that cannot affect results)
         live, n_live0, _ = fresh_checkpoint_count(graph.edges.select(src, dst))
 
-        for rnd in range(max_rounds):
+        for _ in range(max_rounds):
             if n_unk == 0:
                 break
-            gear.resize(-(-n_live0 * n_unk // max(n_v, 1)))
-            if stats is not None:
-                stats["rounds"] = rnd + 1
+            gear.round(-(-n_live0 * n_unk // max(n_v, 1)))
             # min INLINE priority among (UNKNOWN) neighbors
             nbr = live.groupBy(F.col(dst).alias(id_col)).agg(
                 F.min(F.md5(F.col(src).cast("string"))).alias("_minnbr")
@@ -137,19 +136,8 @@ def maximal_independent_set(
             # it (and caches the blocks), so the peel costs no action
             delta = state.where("_just").select(id_col)
             state = state.drop("_just")
-            n_delta = prev_unk - n_unk
-            live = live.join(
-                bcast_if_small(
-                    delta.select(F.col(id_col).alias(src)), n_delta
-                ),
-                on=src,
-                how="left_anti",
-            ).join(
-                bcast_if_small(
-                    delta.select(F.col(id_col).alias(dst)), n_delta
-                ),
-                on=dst,
-                how="left_anti",
+            live = gear.peel(
+                live, delta, prev_unk - n_unk, src, dst
             ).localCheckpoint(eager=False)
         return state.select(
             id_col, (F.col("_st") == IN_SET).alias(status_col)

@@ -38,12 +38,14 @@ rounds are O(log n) in practice.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import Graph
 from ..plans.checkpoint import fresh_checkpoint_count
-from ..plans.gear import LoopGear, bcast_if_small
+from ..plans.gear import LoopGear
 
 
 def max_weight_matching(
@@ -62,11 +64,12 @@ def max_weight_matching(
     the SMALLEST neighbor id — a total order, so the top live edge is
     always locally dominant and every round makes progress
     (MWMComputation.java:96 keeps the first max encountered instead,
-    which depends on edge iteration order).
+    which depends on edge iteration order). ``stats``, if given,
+    records ``rounds`` and ``per_round`` rows.
     """
     id_col, src, dst = graph.id_col, graph.src_col, graph.dst_col
 
-    with LoopGear(graph.vertices.sparkSession) as gear:
+    with LoopGear(graph.vertices.sparkSession, stats=stats) as gear:
         state, n_v, _ = fresh_checkpoint_count(
             graph.vertices.select(
                 id_col, F.lit(None).cast("long").alias("_mw")
@@ -88,12 +91,10 @@ def max_weight_matching(
             )
         )
 
-        for rnd in range(max_rounds):
+        for _ in range(max_rounds):
             if n_live == 0:
                 break
-            gear.resize(n_live)
-            if stats is not None:
-                stats["rounds"] = rnd + 1
+            gear.round(n_live)
             # per-vertex top-1 as a partial-aggregated max(struct) — NOT a
             # window (a window sorts every partition; the struct max is
             # map-side combinable). (weight, -dst) descending-lexicographic
@@ -149,48 +150,9 @@ def max_weight_matching(
             delta = state.where("_just").select(id_col)
             state = state.drop("_just")
             live, n_live, _ = fresh_checkpoint_count(
-                live.join(
-                    bcast_if_small(
-                        delta.select(F.col(id_col).alias(src)), n_matched
-                    ),
-                    on=src,
-                    how="left_anti",
-                ).join(
-                    bcast_if_small(
-                        delta.select(F.col(id_col).alias(dst)), n_matched
-                    ),
-                    on=dst,
-                    how="left_anti",
-                )
+                gear.peel(live, delta, n_matched, src, dst)
             )
         return state.select(id_col, F.col("_mw").alias(match_col))
-
-
-def _assemble_matching(
-    graph: Graph,
-    matched: "list[DataFrame]",
-    id_col: str,
-    src: str,
-    dst: str,
-    match_col: str,
-) -> DataFrame:
-    """(id, matched_with) from the per-round matched-pair deltas: one
-    O(V) left join at the end instead of one per round. The deltas are
-    disjoint (a matched vertex leaves the live graph), so the join is
-    1:1; vertices never matched stay NULL."""
-    ids = graph.vertices.select(id_col)
-    if not matched:
-        return ids.select(
-            id_col, F.lit(None).cast("long").alias(match_col)
-        )
-    pairs = matched[0]
-    for m in matched[1:]:
-        pairs = pairs.unionByName(m)
-    pairs = pairs.select(
-        F.col(src).cast("long").alias(id_col),
-        F.col(dst).cast("long").alias(match_col),
-    )
-    return ids.join(pairs, on=id_col, how="left")
 
 
 def bipartite_matching(
@@ -211,11 +173,12 @@ def bipartite_matching(
     granting right vertex with the smallest ``md5(id)`` (phase 2); the
     accepted pair is matched (phase 3). Repeats until no live edge
     remains, i.e. the matching is maximal. Returns ``(id, matched_with)``
-    over left ∪ right vertices, NULL when unmatched.
+    over left ∪ right vertices, NULL when unmatched. ``stats``, if given,
+    records ``rounds`` and ``per_round`` rows.
     """
     id_col, src, dst = graph.id_col, graph.src_col, graph.dst_col
 
-    with LoopGear(graph.vertices.sparkSession) as gear:
+    with LoopGear(graph.vertices.sparkSession, stats=stats) as gear:
         n_v = graph.vertices.count()
         gear.floor_rows = n_v  # the final O(V) label join
         # the live edge relation IS the request set: edges between two
@@ -227,84 +190,73 @@ def bipartite_matching(
                 F.col(dst).cast("long").alias(dst),
             ).dropDuplicates()
         )
-        return _bipartite_loop(
-            graph, live, n_live, gear, n_v, id_col, src, dst, max_rounds,
-            match_col, stats,
-        )
-
-
-def _bipartite_loop(
-    graph, live, n_live, gear, n_v, id_col, src, dst, max_rounds,
-    match_col, stats,
-):
-    # per-cycle matched deltas, assembled once after the loop (see
-    # max_weight_matching — same one-job-per-round shape: the accepted
-    # relation materializes as the peel's lazily checkpointed
-    # broadcast build side)
-    matched: list[DataFrame] = []
-    for rnd in range(max_rounds):
-        if n_live == 0:
-            break
-        gear.resize(n_live)
-        if stats is not None:
-            stats["rounds"] = rnd + 1
-        requests = live
-        # per-key top-1 via partial-aggregated min(struct(md5, id)) — no
-        # windows (see max_weight_matching); md5 of distinct ids never
-        # ties, the id tiebreak is belt-and-braces
-        grants = (
-            requests.groupBy(dst)
-            .agg(
-                F.min(
-                    F.struct(
-                        F.md5(F.col(src).cast("string")).alias("_h"),
-                        F.col(src).alias("_i"),
-                    )
-                ).alias("_m")
+        # per-cycle matched deltas, assembled once after the loop (see
+        # max_weight_matching — same one-job-per-round shape: the accepted
+        # relation materializes as the peel's lazily checkpointed
+        # broadcast build side)
+        matched: list[DataFrame] = []
+        for _ in range(max_rounds):
+            if n_live == 0:
+                break
+            gear.round(n_live)
+            # per-key top-1 via partial-aggregated min(struct(md5, id)) — no
+            # windows (see max_weight_matching); md5 of distinct ids never
+            # ties, the id tiebreak is belt-and-braces; live IS the request
+            # set (phase 0)
+            grants = (
+                live.groupBy(dst)
+                .agg(
+                    F.min(
+                        F.struct(
+                            F.md5(F.col(src).cast("string")).alias("_h"),
+                            F.col(src).alias("_i"),
+                        )
+                    ).alias("_m")
+                )
+                .select(F.col("_m._i").alias(src), dst)
             )
-            .select(F.col("_m._i").alias(src), dst)
-        )
-        accepted = (
-            grants.groupBy(src)
-            .agg(
-                F.min(
-                    F.struct(
-                        F.md5(F.col(dst).cast("string")).alias("_h"),
-                        F.col(dst).alias("_i"),
-                    )
-                ).alias("_m")
+            accepted = (
+                grants.groupBy(src)
+                .agg(
+                    F.min(
+                        F.struct(
+                            F.md5(F.col(dst).cast("string")).alias("_h"),
+                            F.col(dst).alias("_i"),
+                        )
+                    ).alias("_m")
+                )
+                .select(src, F.col("_m._i").alias(dst))
+            ).localCheckpoint(eager=False)
+            matched.append(accepted)
+            # every cycle matches ≥ 1 pair while live edges remain (the
+            # smallest-hash left vertex's grant is always accepted); peel
+            # the matched vertices' edges. The delta is the matched-id set
+            # (both endpoints); bound for the broadcast gate: at most one
+            # accepted pair per live edge, at most n_v matched ids
+            delta = accepted.select(F.col(src).alias(id_col)).unionByName(
+                accepted.select(F.col(dst).alias(id_col))
             )
-            .select(src, F.col("_m._i").alias(dst))
-        ).localCheckpoint(eager=False)
-        matched.append(accepted)
-        # every cycle matches ≥ 1 pair while live edges remain (the
-        # smallest-hash left vertex's grant is always accepted); peel
-        # the matched vertices' edges. The delta is the matched-id set
-        # (both endpoints); bound for the broadcast gate: at most one
-        # accepted pair per live edge, at most n_v matched ids
-        delta = accepted.select(F.col(src).alias(id_col)).unionByName(
-            accepted.select(F.col(dst).alias(id_col))
-        )
-        bound = min(n_v, 2 * n_live)
-        live, n_live, _ = fresh_checkpoint_count(
-            live.join(
-                bcast_if_small(
-                    delta.select(F.col(id_col).alias(src)), bound
-                ),
-                on=src,
-                how="left_anti",
-            ).join(
-                bcast_if_small(
-                    delta.select(F.col(id_col).alias(dst)), bound
-                ),
-                on=dst,
-                how="left_anti",
+            live, n_live, _ = fresh_checkpoint_count(
+                gear.peel(live, delta, min(n_v, 2 * n_live), src, dst)
             )
+        # (id, matched_with): one O(V) left join at the end instead of one
+        # per cycle. The deltas are disjoint (a matched vertex leaves the
+        # live graph), so the join is 1:1; never-matched vertices stay NULL
+        ids = graph.vertices.select(id_col)
+        if not matched:
+            return ids.select(id_col, F.lit(None).cast("long").alias(match_col))
+        pairs = reduce(
+            DataFrame.unionByName,
+            [
+                m.unionByName(m.select(F.col(dst).alias(src), F.col(src).alias(dst)))
+                for m in matched
+            ],
         )
-    both = [
-        m.select(F.col(src).alias(src), F.col(dst).alias(dst)).unionByName(
-            m.select(F.col(dst).alias(src), F.col(src).alias(dst))
+        return ids.join(
+            pairs.select(
+                F.col(src).cast("long").alias(id_col),
+                F.col(dst).cast("long").alias(match_col),
+            ),
+            on=id_col,
+            how="left",
         )
-        for m in matched
-    ]
-    return _assemble_matching(graph, both, id_col, src, dst, match_col)

@@ -31,6 +31,8 @@ estimate otherwise squares per iteration (see plans/checkpoint.py).
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -133,195 +135,176 @@ def minimum_spanning_forest(
     groupBy and the input checkpoint are skipped, so a bucketed scan's
     hash partitioning flows straight into round 1's ``u``-side join —
     zero input exchange on the edge relation (plan-asserted in
-    tests/test_mst.py). The repeated-run storage layout."""
+    tests/test_mst.py). The repeated-run storage layout. ``stats``, if
+    given, records ``rounds`` and ``per_round`` rows."""
     src, dst = graph.src_col, graph.dst_col
     u = F.least(F.col(src), F.col(dst))
     v = F.greatest(F.col(src), F.col(dst))
-    spark = graph.edges.sparkSession
-    with LoopGear(spark) as gear:
-        return _msf_loop(
-            graph, weight_col, max_rounds, stats, gear, u, v,
-            assume_canonical,
-        )
-
-
-def _msf_loop(
-    graph, weight_col, max_rounds, stats, gear, u, v, assume_canonical
-):
-    src, dst = graph.src_col, graph.dst_col
-    if assume_canonical:
-        # keep the relation LAZY over its (possibly bucketed) scan: a
-        # checkpoint here would wrap it in a LogicalRDD with unknown
-        # partitioning and forfeit the storage layout
-        live = graph.edges.select(
-            F.col(src).cast("long").alias("u"),
-            F.col(dst).cast("long").alias("v"),
-            F.col(weight_col).cast("double").alias("w"),
-        )
+    with LoopGear(graph.edges.sparkSession, stats=stats) as gear:
         labels = graph.vertices.select(
             F.col(graph.id_col).cast("long").alias("vid"),
             F.col(graph.id_col).cast("long").alias("comp"),
         )
-        n_v = graph.vertices.count()
-    else:
-        live = fresh_checkpoint(
-            graph.edges.where(F.col(src) != F.col(dst))
-            .select(
-                u.cast("long").alias("u"),
-                v.cast("long").alias("v"),
+        if assume_canonical:
+            # keep the relation LAZY over its (possibly bucketed) scan: a
+            # checkpoint here would wrap it in a LogicalRDD with unknown
+            # partitioning and forfeit the storage layout
+            live = graph.edges.select(
+                F.col(src).cast("long").alias("u"),
+                F.col(dst).cast("long").alias("v"),
                 F.col(weight_col).cast("double").alias("w"),
             )
-            .groupBy("u", "v")
-            .agg(F.min("w").alias("w"))
-        )
-        labels, n_v, _ = fresh_checkpoint_count(
-            graph.vertices.select(
-                F.col(graph.id_col).cast("long").alias("vid"),
-                F.col(graph.id_col).cast("long").alias("comp"),
-            )
-        )
-    gear.floor_rows = n_v  # the per-round O(V) label rewrite
-    # per-round selected-edge frames, unioned ONCE at the end: each
-    # frame derives from that round's EAGERLY checkpointed sel relation,
-    # so the final union is a flat read of cached blocks — the per-round
-    # forest checkpoint job (a growing O(forest) rewrite) disappears
-    picked_frames: list[DataFrame] = []
-
-    for rnd in range(max_rounds):
-        # the label relation has exactly n_v rows — broadcast-gated
-        # (plans/gear.py), both endpoint joins go map-side on small/mid
-        # graphs and the live edge relation never shuffles for them;
-        # past the gate it falls back to the co-keyed shuffle join
-        lu = bcast_if_small(
-            labels.select(F.col("vid").alias("u"), F.col("comp").alias("cu")),
-            n_v,
-        )
-        lv = bcast_if_small(
-            labels.select(F.col("vid").alias("v"), F.col("comp").alias("cv")),
-            n_v,
-        )
-        # convergence probe rides the checkpoint materialization — one
-        # job per round, and the count doubles as the gear signal
-        le, n_live, _ = fresh_checkpoint_count(
-            live.join(lu, "u")
-            .join(lv, "v")
-            .where(F.col("cu") != F.col("cv"))
-        )
-        if n_live == 0:
-            break
-        gear.resize(n_live)
-        if stats is not None:
-            stats["rounds"] = rnd + 1
-        # every component ranks its outgoing edges by the (w, u, v)
-        # total order; min(struct) is partial-aggregated (no window)
-        both = le.select(
-            F.col("cu").alias("comp"), F.col("cv").alias("oc"), "u", "v", "w"
-        ).unionByName(
-            le.select(
-                F.col("cv").alias("comp"),
-                F.col("cu").alias("oc"),
-                "u",
-                "v",
-                "w",
-            )
-        )
-        # LAZY checkpoint (r13, guide §1.2): sel has no convergence
-        # probe of its own — its blocks are materialized by the first
-        # job that reads it (the mutual-pair self-join below / the
-        # first pointer jump), saving one action per round. _rewrap
-        # still resets the inherited stats so the sel ⨝ sel(other)
-        # self-join plans against fresh leaf estimates.
-        sel = _rewrap(
-            both.groupBy("comp")
-            .agg(F.min(F.struct("w", "u", "v", "oc")).alias("m"))
-            .select("comp", "m.w", "m.u", "m.v", "m.oc")
-            .localCheckpoint(eager=False)
-        )
-        picked_frames.append(sel.select("u", "v", "w").distinct())
-
-        # component merge: parent(comp) = oc, except the smaller member
-        # of each MUTUAL pair roots itself (each merge tree contains
-        # exactly one mutual pair — its globally-lightest edge is
-        # selected from both sides under the total order)
-        # sel/other/parent are component-keyed (≤ n_v rows, shrinking
-        # geometrically) — broadcast-gated like the label joins
-        other = bcast_if_small(
-            sel.select(
-                F.col("comp").alias("b_comp"), F.col("oc").alias("b_oc")
-            ),
-            n_v,
-        )
-        # lazy like sel: the first pointer jump's count job (which
-        # ALWAYS runs) materializes parent together with sel — the
-        # round's three standalone checkpoint actions collapse into
-        # the jump-1 materialization. labels below stays EAGER: the
-        # r12 fully-lazy variant (labels deferred too) measured 37%
-        # slower, so the O(V) state rewrite keeps its own action.
-        parent = _rewrap(
-            sel.join(
-                other,
-                (F.col("oc") == F.col("b_comp"))
-                & (F.col("b_oc") == F.col("comp")),
-                "left",
-            )
-            .select(
-                F.col("comp"),
-                F.when(
-                    F.col("b_comp").isNotNull()
-                    & (F.col("comp") < F.col("oc")),
-                    F.col("comp"),
+            n_v = graph.vertices.count()
+        else:
+            live = fresh_checkpoint(
+                graph.edges.where(F.col(src) != F.col(dst))
+                .select(
+                    u.cast("long").alias("u"),
+                    v.cast("long").alias("v"),
+                    F.col(weight_col).cast("double").alias("w"),
                 )
-                .otherwise(F.col("oc"))
-                .alias("par"),
+                .groupBy("u", "v")
+                .agg(F.min("w").alias("w"))
             )
-            .localCheckpoint(eager=False)
-        )
-        # pointer jumping to the 2-cycle roots: depth halves per jump.
-        # The "did any pointer move" probe is carried as a flag column
-        # and counted inside the checkpoint job — no jumped ⨝ parent
-        # comparison join, no second action per jump
+            labels, n_v, _ = fresh_checkpoint_count(labels)
+        gear.floor_rows = n_v  # the per-round O(V) label rewrite
+        # per-round selected-edge frames, unioned ONCE at the end: each
+        # frame derives from that round's EAGERLY checkpointed sel relation,
+        # so the final union is a flat read of cached blocks — the per-round
+        # forest checkpoint job (a growing O(forest) rewrite) disappears
+        picked_frames: list[DataFrame] = []
+
         for _ in range(max_rounds):
-            grand = bcast_if_small(
-                parent.select(
-                    F.col("comp").alias("g_comp"), F.col("par").alias("g_par")
+            # the label relation has exactly n_v rows — broadcast-gated
+            # (plans/gear.py), both endpoint joins go map-side on small/mid
+            # graphs and the live edge relation never shuffles for them;
+            # past the gate it falls back to the co-keyed shuffle join
+            lu = bcast_if_small(
+                labels.select(F.col("vid").alias("u"), F.col("comp").alias("cu")),
+                n_v,
+            )
+            lv = bcast_if_small(
+                labels.select(F.col("vid").alias("v"), F.col("comp").alias("cv")),
+                n_v,
+            )
+            # convergence probe rides the checkpoint materialization — one
+            # job per round, and the count doubles as the gear signal
+            le, n_live, _ = fresh_checkpoint_count(
+                live.join(lu, "u")
+                .join(lv, "v")
+                .where(F.col("cu") != F.col("cv"))
+            )
+            if n_live == 0:
+                break
+            gear.round(n_live)
+            # every component ranks its outgoing edges by the (w, u, v)
+            # total order; min(struct) is partial-aggregated (no window)
+            both = le.select(
+                F.col("cu").alias("comp"), F.col("cv").alias("oc"), "u", "v", "w"
+            ).unionByName(
+                le.select(
+                    F.col("cv").alias("comp"),
+                    F.col("cu").alias("oc"),
+                    "u",
+                    "v",
+                    "w",
+                )
+            )
+            # LAZY checkpoint (r13, guide §1.2): sel has no convergence
+            # probe of its own — its blocks are materialized by the first
+            # job that reads it (the mutual-pair self-join below / the
+            # first pointer jump), saving one action per round. _rewrap
+            # still resets the inherited stats so the sel ⨝ sel(other)
+            # self-join plans against fresh leaf estimates.
+            sel = _rewrap(
+                both.groupBy("comp")
+                .agg(F.min(F.struct("w", "u", "v", "oc")).alias("m"))
+                .select("comp", "m.w", "m.u", "m.v", "m.oc")
+                .localCheckpoint(eager=False)
+            )
+            picked_frames.append(sel.select("u", "v", "w").distinct())
+
+            # component merge: parent(comp) = oc, except the smaller member
+            # of each MUTUAL pair roots itself (each merge tree contains
+            # exactly one mutual pair — its globally-lightest edge is
+            # selected from both sides under the total order)
+            # sel/other/parent are component-keyed (≤ n_v rows, shrinking
+            # geometrically) — broadcast-gated like the label joins
+            other = bcast_if_small(
+                sel.select(
+                    F.col("comp").alias("b_comp"), F.col("oc").alias("b_oc")
                 ),
                 n_v,
             )
-            jumped, _, n_moved = fresh_checkpoint_count(
-                parent.join(
-                    grand, parent["par"] == grand["g_comp"], "left"
-                ).select(
-                    "comp",
-                    F.coalesce("g_par", "par").alias("par"),
-                    (
-                        F.col("g_par").isNotNull()
-                        & (F.col("g_par") != F.col("par"))
-                    ).alias("_moved"),
-                ),
-                flag=F.col("_moved"),
+            # lazy like sel: the first pointer jump's count job (which
+            # ALWAYS runs) materializes parent together with sel — the
+            # round's three standalone checkpoint actions collapse into
+            # the jump-1 materialization. labels below stays EAGER: the
+            # r12 fully-lazy variant (labels deferred too) measured 37%
+            # slower, so the O(V) state rewrite keeps its own action.
+            parent = _rewrap(
+                sel.join(
+                    other,
+                    (F.col("oc") == F.col("b_comp"))
+                    & (F.col("b_oc") == F.col("comp")),
+                    "left",
+                )
+                .select(
+                    F.col("comp"),
+                    F.when(
+                        F.col("b_comp").isNotNull()
+                        & (F.col("comp") < F.col("oc")),
+                        F.col("comp"),
+                    )
+                    .otherwise(F.col("oc"))
+                    .alias("par"),
+                )
+                .localCheckpoint(eager=False)
             )
-            parent = jumped.drop("_moved")
-            if n_moved == 0:
-                break
-        labels = fresh_checkpoint(
-            labels.join(
-                bcast_if_small(
-                    parent.select(F.col("comp"), F.col("par").alias("_new")),
+            # pointer jumping to the 2-cycle roots: depth halves per jump.
+            # The "did any pointer move" probe is carried as a flag column
+            # and counted inside the checkpoint job — no jumped ⨝ parent
+            # comparison join, no second action per jump
+            for _ in range(max_rounds):
+                grand = bcast_if_small(
+                    parent.select(
+                        F.col("comp").alias("g_comp"), F.col("par").alias("g_par")
+                    ),
                     n_v,
-                ),
-                "comp",
-                "left",
-            ).select("vid", F.coalesce("_new", "comp").alias("comp"))
-        )
-        # intra-component edges (under the OLD labels) can never be
-        # selected again — shrink the live set
-        live = le.select("u", "v", "w")
+                )
+                jumped, _, n_moved = fresh_checkpoint_count(
+                    parent.join(
+                        grand, parent["par"] == grand["g_comp"], "left"
+                    ).select(
+                        "comp",
+                        F.coalesce("g_par", "par").alias("par"),
+                        (
+                            F.col("g_par").isNotNull()
+                            & (F.col("g_par") != F.col("par"))
+                        ).alias("_moved"),
+                    ),
+                    flag=F.col("_moved"),
+                )
+                parent = jumped.drop("_moved")
+                if n_moved == 0:
+                    break
+            labels = fresh_checkpoint(
+                labels.join(
+                    bcast_if_small(
+                        parent.select(F.col("comp"), F.col("par").alias("_new")),
+                        n_v,
+                    ),
+                    "comp",
+                    "left",
+                ).select("vid", F.coalesce("_new", "comp").alias("comp"))
+            )
+            # intra-component edges (under the OLD labels) can never be
+            # selected again — shrink the live set
+            live = le.select("u", "v", "w")
 
-    if not picked_frames:
-        return live.select(
-            F.col("u"), F.col("v"), F.col("w").alias(weight_col)
-        ).limit(0)
-    forest = picked_frames[0]
-    for p in picked_frames[1:]:
-        forest = forest.unionByName(p)
-    return forest.select("u", "v", F.col("w").alias(weight_col))
+        if not picked_frames:
+            return live.select(
+                F.col("u"), F.col("v"), F.col("w").alias(weight_col)
+            ).limit(0)
+        forest = reduce(DataFrame.unionByName, picked_frames)
+        return forest.select("u", "v", F.col("w").alias(weight_col))

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from ..graph import Graph
 from ..plans.checkpoint import fresh_checkpoint_count
+from ..plans.gear import LoopGear
 from ..pregel import MSG, PregelMetrics, pregel
 
 
@@ -57,111 +58,112 @@ def scc(
 ) -> DataFrame:
     """Returns ``(id, scc)`` where ``scc`` = max vertex id of the strongly
     connected component. ``stats``, if given, records ``rounds`` (FW-BW
-    layers peeled — the reference's phase-machine cycle count) and
-    ``supersteps`` (total across all forward+backward traversals — the
-    diameter-bound quantity the scale-stress harness tracks)."""
+    layers peeled — the reference's phase-machine cycle count) with
+    their ``per_round`` rows, and ``supersteps`` (total across all
+    forward+backward traversals — the diameter-bound quantity the
+    scale-stress harness tracks). Raises ``RuntimeError`` when a
+    traversal runs into ``max_supersteps`` unconverged."""
     id_col, src, dst = graph.id_col, graph.src_col, graph.dst_col
 
-    remaining = graph.vertices.select(id_col)
-    assigned: DataFrame | None = None
-    edges_all = graph.edges.select(src, dst).persist()
-    edges_all.count()
+    # the pregel traversals open their own conf windows; the induced-
+    # subgraph shuffles between them keep the session's AQE
+    with LoopGear(graph.vertices.sparkSession, window=False, stats=stats) as gear:
+        remaining = graph.vertices.select(id_col)
+        assigned: DataFrame | None = None
+        edges_all = gear.persist(graph.edges.select(src, dst))
+        edges_all.count()
 
-    for rnd in range(max_rounds):
-        # the emptiness probe rides the checkpoint materialization —
-        # one job per round (plans/checkpoint.py)
-        remaining, n_rem, _ = fresh_checkpoint_count(remaining)
-        if n_rem == 0:
-            break
-        if stats is not None:
-            stats["rounds"] = rnd + 1
+        for _ in range(max_rounds):
+            # the emptiness probe rides the checkpoint materialization —
+            # one job per round (plans/checkpoint.py)
+            remaining, n_rem, _ = fresh_checkpoint_count(remaining)
+            if n_rem == 0:
+                break
+            gear.round(n_rem)
 
-        # induced subgraph on remaining vertices
-        e = (
-            edges_all.join(
-                remaining.select(F.col(id_col).alias(src)), on=src, how="left_semi"
-            )
-            .join(remaining.select(F.col(id_col).alias(dst)), on=dst, how="left_semi")
-            .persist()
-        )
-        sub = Graph(remaining, e, id_col, src, dst)
-
-        # Phase 1: forward max-coloring (FORWARD_TRAVERSAL)
-        m_fwd = PregelMetrics()
-        colored = pregel(
-            sub,
-            metrics=m_fwd,
-            initial={"_color": F.col(id_col).cast("long")},
-            update=lambda ctx: {
-                "_color": F.greatest(F.col("_color"), F.col(MSG)),
-                "_chg": F.lit(ctx.superstep == 0)
-                | (F.coalesce(F.col(MSG), F.lit(-(2**62))) > F.col("_color")),
-            },
-            combine=F.max,
-            msg_type="long",
-            send_msg=F.when(F.col("_chg"), F.col("_color")),
-            vote_to_halt=F.lit(True),
-            max_supersteps=max_supersteps,
-        ).select(id_col, "_color")
-        _converged_or_raise(m_fwd, "forward", max_supersteps)
-
-        # Phase 2: backward membership flood within color class
-        # (BACKWARD_TRAVERSAL): roots send color along reversed edges.
-        csub = Graph(colored, e, id_col, src, dst)
-        m_bwd = PregelMetrics()
-        member = pregel(
-            csub,
-            metrics=m_bwd,
-            initial={"_member": F.col("_color") == F.col(id_col)},
-            update=lambda ctx: {
-                "_member": F.col("_member")
-                | (
-                    F.col(MSG).isNotNull()
-                    & F.array_contains(F.col(MSG), F.col("_color"))
-                ),
-                "_chg": (
-                    F.lit(ctx.superstep == 0) & F.col("_member")
+            # induced subgraph on remaining vertices
+            e = gear.persist(
+                edges_all.join(
+                    remaining.select(F.col(id_col).alias(src)), on=src, how="left_semi"
+                ).join(
+                    remaining.select(F.col(id_col).alias(dst)), on=dst, how="left_semi"
                 )
-                | (
-                    ~F.col("_member")
-                    & F.col(MSG).isNotNull()
-                    & F.array_contains(F.col(MSG), F.col("_color"))
-                ),
-            },
-            combine=F.collect_set,
-            msg_type="array<bigint>",  # type after the combine step
-            send_msg_to_src=F.when(F.col("_chg"), F.col("_color")),
-            vote_to_halt=F.lit(True),
-            max_supersteps=max_supersteps,
-        ).select(id_col, "_color", "_member")
-        _converged_or_raise(m_bwd, "backward", max_supersteps)
-        if stats is not None:
-            stats["supersteps"] = (
-                stats.get("supersteps", 0)
-                + m_fwd.num_supersteps
-                + m_bwd.num_supersteps
             )
+            sub = Graph(remaining, e, id_col, src, dst)
 
-        found = member.filter(F.col("_member")).select(
-            id_col, F.col("_color").cast("long").alias(scc_col)
-        )
-        assigned = (
-            found
-            if assigned is None
-            else assigned.unionByName(found).localCheckpoint(eager=True)
-        )
-        remaining = (
-            member.filter(~F.col("_member")).select(id_col)
-        )
-        e.unpersist()
+            # Phase 1: forward max-coloring (FORWARD_TRAVERSAL)
+            m_fwd = PregelMetrics()
+            colored = pregel(
+                sub,
+                metrics=m_fwd,
+                initial={"_color": F.col(id_col).cast("long")},
+                update=lambda ctx: {
+                    "_color": F.greatest(F.col("_color"), F.col(MSG)),
+                    "_chg": F.lit(ctx.superstep == 0)
+                    | (F.coalesce(F.col(MSG), F.lit(-(2**62))) > F.col("_color")),
+                },
+                combine=F.max,
+                msg_type="long",
+                send_msg=F.when(F.col("_chg"), F.col("_color")),
+                vote_to_halt=F.lit(True),
+                max_supersteps=max_supersteps,
+            ).select(id_col, "_color")
+            _converged_or_raise(m_fwd, "forward", max_supersteps)
 
-    edges_all.unpersist()
-    if assigned is None:
-        return graph.vertices.select(
+            # Phase 2: backward membership flood within color class
+            # (BACKWARD_TRAVERSAL): roots send color along reversed edges.
+            csub = Graph(colored, e, id_col, src, dst)
+            m_bwd = PregelMetrics()
+            member = pregel(
+                csub,
+                metrics=m_bwd,
+                initial={"_member": F.col("_color") == F.col(id_col)},
+                update=lambda ctx: {
+                    "_member": F.col("_member")
+                    | (
+                        F.col(MSG).isNotNull()
+                        & F.array_contains(F.col(MSG), F.col("_color"))
+                    ),
+                    "_chg": (
+                        F.lit(ctx.superstep == 0) & F.col("_member")
+                    )
+                    | (
+                        ~F.col("_member")
+                        & F.col(MSG).isNotNull()
+                        & F.array_contains(F.col(MSG), F.col("_color"))
+                    ),
+                },
+                combine=F.collect_set,
+                msg_type="array<bigint>",  # type after the combine step
+                send_msg_to_src=F.when(F.col("_chg"), F.col("_color")),
+                vote_to_halt=F.lit(True),
+                max_supersteps=max_supersteps,
+            ).select(id_col, "_color", "_member")
+            _converged_or_raise(m_bwd, "backward", max_supersteps)
+            if stats is not None:
+                stats["supersteps"] = (
+                    stats.get("supersteps", 0)
+                    + m_fwd.num_supersteps
+                    + m_bwd.num_supersteps
+                )
+
+            found = member.filter(F.col("_member")).select(
+                id_col, F.col("_color").cast("long").alias(scc_col)
+            )
+            assigned = (
+                found
+                if assigned is None
+                else assigned.unionByName(found).localCheckpoint(eager=True)
+            )
+            remaining = member.filter(~F.col("_member")).select(id_col)
+            e.unpersist()
+
+        if assigned is None:
+            return graph.vertices.select(
+                id_col, F.col(id_col).cast("long").alias(scc_col)
+            )
+        # any leftovers past max_rounds: their own id (singleton fallback)
+        leftovers = remaining.select(
             id_col, F.col(id_col).cast("long").alias(scc_col)
         )
-    # any leftovers past max_rounds: their own id (singleton fallback)
-    leftovers = remaining.select(
-        id_col, F.col(id_col).cast("long").alias(scc_col)
-    )
-    return assigned.unionByName(leftovers)
+        return assigned.unionByName(leftovers)

@@ -188,9 +188,8 @@ def k_truss(
         # initial orient + count in one job; the per-round survivor
         # count likewise rides each checkpoint materialization
         e, n_prev, _ = fresh_checkpoint_count(_oriented(graph))
-        supp = None
         for _ in range(max_rounds):
-            gear.resize(n_prev)
+            gear.round(n_prev)
             e1, e2, e3 = e.alias("e1"), e.alias("e2"), e.alias("e3")
             tri = (
                 e1.join(e2, F.col(f"e1.{dst}") == F.col(f"e2.{src}"))

@@ -1,99 +1,189 @@
-"""Adaptive shuffle-width gear-down for driver-side round loops.
+"""The driver-side round loop: one primitive for the pregel kernel and
+the standalone round loops.
 
-The pregel kernel re-sizes its shuffle width every superstep from the
-live message volume (``pregel.py`` step 9 — the r4 fix for sssp's
-convergence tail, where 14 supersteps each paid 32-task scheduling to
-move a handful of frontier rows). The standalone round loops — Borůvka
-MSF, the two matchings, Jones–Plassmann coloring, Luby MIS, k-truss
-peeling, FW-BW SCC — have the same shape: a live set that SHRINKS
-monotonically every round, with each round paying one-or-two shuffles
-sized for the full graph long after the live set has collapsed.
-This module is the kernel's gear-down extracted for those loops.
+Every iterative algorithm here is a driver loop of checkpoint-truncated
+rounds — the pregel kernel's supersteps, and the Borůvka MSF, matching,
+coloring, MIS, k-truss, k-core, SCC and deadlock loops. :class:`LoopGear`
+owns the mechanics they share:
 
-Why AQE doesn't already do this: with
-``spark.sql.adaptive.coalescePartitions.parallelismFirst`` (default
-true) AQE coalesces small shuffles only down to the default
-parallelism — 32 on a 32-core box — precisely to preserve parallelism,
-so a 50-row round still schedules 32 tasks per exchange. And inside a
-checkpoint-truncated loop AQE must be OFF anyway (pregel.py:140-151:
-AdaptiveSparkPlanExec's undecided output partitioning at checkpoint
-time breaks exchange reuse). :class:`LoopGear` therefore manages both:
-AQE off + explicit width for the loop's duration, both restored on any
-exit.
+- **the session-conf window.** Inside a checkpoint-truncated loop AQE
+  must be OFF: AdaptiveSparkPlanExec's undecided output partitioning at
+  checkpoint time breaks exchange reuse (see ``pregel.pregel``). And AQE
+  would not shrink a collapsed loop anyway: with
+  ``spark.sql.adaptive.coalescePartitions.parallelismFirst`` (default
+  true) it coalesces only down to the default parallelism, so a 50-row
+  round still schedules 32 tasks per exchange on a 32-core box. So the
+  window turns AQE off and sets an explicit shuffle width, and restores
+  both on any exit;
+- **the gear.** A loop whose live set collapses re-fits the width to it
+  (:meth:`LoopGear.resize`), with 2× hysteresis both ways so re-plans
+  stay O(log width) per run, and never below ``floor_rows /
+  ROWS_PER_PARTITION`` — the per-round O(V) state rewrite must not
+  serialize. The kernel, whose frontier can regrow, passes its
+  declining-frontier gate; the standalone loops' live sets are monotone,
+  so they may gear down at once;
+- **the persisted-frame registry**, released on any exit, so a raise
+  mid-loop leaves no cached frame behind;
+- **per-round bookkeeping** (:meth:`LoopGear.round`): ``stats["rounds"]``
+  and one ``stats["per_round"]`` row per round, in the shape of a
+  ``PregelMetrics.supersteps`` row, from counts the loop already has;
+- **the delta peel** (:meth:`LoopGear.peel`): the broadcast-gated
+  anti-join that drops the live edges incident to a round's decided
+  vertices.
 
-Unlike the kernel (whose frontier can regrow, hence the declining-only
-gate), these loops' live sets are monotone, so the gear may step down
-immediately; the 2× hysteresis still bounds re-plans to O(log width)
-per run. The width never drops below ``floor_rows / ROWS_PER_PARTITION``
-— the per-round O(V) state rewrite must not serialize.
+Loops whose shuffles AQE still sizes (k-core, s-core, SCC, deadlock
+detection) open it with ``window=False``: conf untouched, no gear.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+import gc
+import time
 
-from ..pregel import ROWS_PER_PARTITION
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+# Auto-partitioning target: a loop sizes its shuffles so each task
+# carries about this many edge/message rows — the coalescing AQE would
+# do, made explicitly because AQE is off inside the loops.
+ROWS_PER_PARTITION = 150_000
+
+_AQE = "spark.sql.adaptive.enabled"
+_PARTS = "spark.sql.shuffle.partitions"
 
 
 class LoopGear:
-    """Context manager: ``with LoopGear(spark) as gear:`` around a round
-    loop; call ``gear.resize(live_rows)`` once per round with the live
-    set size in the unit that dominates the round's shuffles (live
-    EDGES for edge-relation loops; live vertices × avg degree when only
-    a vertex count is at hand). Sets ``floor_rows`` (typically |V|) as
-    soon as the loop learns it.
+    """Context manager around one round loop:
+    ``with LoopGear(spark, stats=stats) as gear:``.
 
-    Mutates the session's ``spark.sql.shuffle.partitions`` /
-    ``spark.sql.adaptive.enabled`` for the loop's duration and restores
-    them on exit — the same session-global window the pregel kernel
-    documents (pregel.py:161-172); concurrent OLAP belongs on
-    ``spark.newSession()``.
+    With ``window=True`` (the default) the session's
+    ``spark.sql.adaptive.enabled`` / ``spark.sql.shuffle.partitions``
+    are mutated for the loop's duration — AQE off, the width ``width``
+    (default: the session's), which is also the gear's ceiling — and
+    restored on exit. This is a session-global window (see
+    ``pregel.pregel``); concurrent OLAP belongs on ``spark.newSession()``.
+    Set ``floor_rows`` as soon as the loop learns it.
+
+    ``stats``, if given, receives ``rounds`` and ``per_round`` rows
+    ``{round, live, partitions, seconds}``.
     """
 
-    def __init__(self, spark: SparkSession, floor_rows: int | None = None):
+    def __init__(
+        self,
+        spark: SparkSession,
+        *,
+        width: int | None = None,
+        window: bool = True,
+        stats: dict | None = None,
+    ):
         self.spark = spark
-        self.floor_rows = floor_rows
-        self._aqe_before: str | None = None
-        self._parts_before: str | None = None
+        #: rows of the per-round O(V) state rewrite (typically |V|); the
+        #: gear never narrows below what they need
+        self.floor_rows: int | None = None
+        self.width = width
+        self.window = window
+        self.stats = stats
         self.ceiling: int = 0
         self.cur: int = 0
+        self._saved: tuple[str, str] | None = None
+        self._persisted: list[DataFrame] = []
+        self._t: float | None = None  # start of the open per_round row
 
     def __enter__(self) -> "LoopGear":
         conf = self.spark.conf
-        self._aqe_before = conf.get("spark.sql.adaptive.enabled", "true")
-        self._parts_before = conf.get("spark.sql.shuffle.partitions", "200")
-        self.ceiling = int(self._parts_before)
-        self.cur = self.ceiling
-        conf.set("spark.sql.adaptive.enabled", "false")
+        parts = conf.get(_PARTS, "200")
+        if self.window:
+            self._saved = (conf.get(_AQE, "true"), parts)
+            conf.set(_AQE, "false")
+            if self.width is not None:
+                parts = str(self.width)
+                conf.set(_PARTS, parts)
+        self.ceiling = self.cur = int(parts)
+        if self.stats is not None:
+            self.stats.update(rounds=0, per_round=[])
         return self
 
     def __exit__(self, *exc) -> None:
-        self.spark.conf.set("spark.sql.adaptive.enabled", self._aqe_before)
-        self.spark.conf.set(
-            "spark.sql.shuffle.partitions", self._parts_before
-        )
+        self._close_row()
+        # unpersist is a no-op for frames already released in-loop
+        for df in self._persisted:
+            try:
+                df.unpersist()
+            except Exception:
+                pass
+        self._persisted.clear()
+        # drop this side's py4j references so the ContextCleaner frees
+        # the loop's dead checkpoint blocks promptly
+        gc.collect()
+        if self._saved is not None:
+            self.spark.conf.set(_AQE, self._saved[0])
+            self.spark.conf.set(_PARTS, self._saved[1])
 
-    def resize(self, live_rows: int) -> int:
-        """Re-fit the loop's shuffle width to ``live_rows``; returns the
-        width now in force. 2× hysteresis both ways; floor at the state
-        rewrite's need; ceiling at the session's configured width."""
-        floor = (
-            1
-            if self.floor_rows is None
-            else max(
-                1,
-                min(self.ceiling, -(-self.floor_rows // ROWS_PER_PARTITION)),
+    def persist(self, df: DataFrame, level=None) -> DataFrame:
+        """``df.persist(level)``, released when the loop exits."""
+        df = df.persist() if level is None else df.persist(level)
+        self._persisted.append(df)
+        return df
+
+    def resize(self, live_rows: int, declining: bool = True) -> int:
+        """Re-fit the shuffle width to ``live_rows``, in the unit that
+        dominates the round's shuffles (live EDGES for edge-relation
+        loops); returns the width now in force. 2× hysteresis both ways
+        (gearing down only when ``declining``); floor at the state
+        rewrite's need; ceiling at the loop's width. No-op without the
+        conf window."""
+        if not self.window:
+            return self.cur
+        floor = 1
+        if self.floor_rows is not None:
+            floor = max(
+                1, min(self.ceiling, -(-self.floor_rows // ROWS_PER_PARTITION))
             )
-        )
         want = max(
             floor, min(self.ceiling, -(-live_rows // ROWS_PER_PARTITION))
         )
-        if want * 2 <= self.cur or want >= self.cur * 2:
+        if (want * 2 <= self.cur and declining) or want >= self.cur * 2:
             self.cur = want
-            self.spark.conf.set(
-                "spark.sql.shuffle.partitions", str(self.cur)
-            )
+            self.spark.conf.set(_PARTS, str(want))
         return self.cur
+
+    def round(self, live: int) -> None:
+        """Open the next round: :meth:`resize` to ``live`` and, with
+        ``stats``, count the round and log its row (its ``seconds`` run
+        until the next round opens or the loop exits). Adds no Spark
+        job."""
+        self.resize(live)
+        if self.stats is None:
+            return
+        self._close_row()
+        rows = self.stats["per_round"]
+        rows.append(
+            {"round": len(rows), "live": live, "partitions": self.cur, "seconds": 0.0}
+        )
+        self.stats["rounds"] = len(rows)
+        self._t = time.monotonic()
+
+    def _close_row(self) -> None:
+        if self._t is not None:
+            self.stats["per_round"][-1]["seconds"] = time.monotonic() - self._t
+            self._t = None
+
+    @staticmethod
+    def peel(
+        live: DataFrame, delta: DataFrame, n_delta: int, *cols: str
+    ) -> DataFrame:
+        """``live`` without its rows whose ``cols`` hit the one-column id
+        relation ``delta`` (at most ``n_delta`` rows): one left anti-join
+        per column, each map-side once the delta fits the broadcast gate,
+        so the cached live side never moves."""
+        (key,) = delta.columns
+        for c in cols:
+            live = live.join(
+                bcast_if_small(delta.select(F.col(key).alias(c)), n_delta),
+                on=c,
+                how="left_anti",
+            )
+        return live
 
 
 # Driver-known broadcast gate for round loops: the loops learn exact row
@@ -162,8 +252,6 @@ def bcast_if_small(
     can't see: for an array column, pass ``ARRAY_ELEM_BYTES × total
     elements across all rows`` (often exactly known, e.g. coloring's
     ``_taken`` sets hold at most one entry per live in-edge)."""
-    from pyspark.sql import functions as F
-
     if limit_bytes is None:
         limit_bytes = broadcast_limit_bytes(df.sparkSession)
     return (

@@ -43,6 +43,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .graph import Graph
+from .plans.gear import ROWS_PER_PARTITION, LoopGear
 
 MSG = "_msg"
 HAS_MSG = "_has_msg"
@@ -108,13 +109,6 @@ def _resolve(expr: Any, ctx: PregelContext) -> Any:
     return expr(ctx) if callable(expr) and not isinstance(expr, Column) else expr
 
 
-# Auto-partitioning target: the kernel sizes its shuffles so each task
-# carries about this many edge/message rows. AQE's coalescing would do
-# this adaptively, but AQE must stay off inside the loop (see pregel());
-# this is the same decision made statically, once per run.
-ROWS_PER_PARTITION = 150_000
-
-
 def _auto_partitions(graph: Graph, conf_parts: int) -> int:
     """Size the run's shuffle-partition count from the graph, bounded
     above by the session's ``spark.sql.shuffle.partitions`` (the
@@ -171,8 +165,6 @@ def pregel(graph: Graph, num_partitions: int | None = None, **kwargs) -> DataFra
     SQL conf), which is free; the pregel run itself is unaffected by
     either choice."""
     spark = graph.vertices.sparkSession
-    aqe_before = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    parts_before = spark.conf.get("spark.sql.shuffle.partitions", "200")
     if num_partitions is not None:
         nparts = num_partitions
     elif graph.edges_layout is not None:
@@ -180,26 +172,16 @@ def pregel(graph: Graph, num_partitions: int | None = None, **kwargs) -> DataFra
         # the loop partitioning and the input repartition disappears
         nparts = graph.edges_layout[1]
     else:
-        nparts = _auto_partitions(graph, int(parts_before))
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(nparts))
-    # Every frame the run persists is registered here and released on ANY
-    # exit — normal return, master_fn exception, executor loss. Without
-    # this, a failed attempt (exactly the case run_with_retries exists
-    # for) would leave the cached edge relation + message frames in the
-    # block manager, and retries would stack copies until OOM.
-    persisted: list[DataFrame] = []
-    try:
-        return _pregel_impl(graph, _persist_registry=persisted, **kwargs)
-    finally:
-        for df in persisted:
-            try:
-                df.unpersist()  # no-op if already released in-loop
-            except Exception:
-                pass
-        gc.collect()
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
-        spark.conf.set("spark.sql.shuffle.partitions", parts_before)
+        nparts = _auto_partitions(
+            graph, int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+        )
+    # The gear releases every frame the run persists on ANY exit — normal
+    # return, master_fn exception, executor loss. Without this, a failed
+    # attempt (exactly the case run_with_retries exists for) would leave
+    # the cached edge relation + message frames in the block manager, and
+    # retries would stack copies until OOM.
+    with LoopGear(spark, width=nparts) as gear:
+        return _pregel_impl(graph, gear=gear, **kwargs)
 
 
 def _hadoop_fs(spark, path: str):
@@ -363,7 +345,7 @@ def _pregel_impl(
     metrics: PregelMetrics | None = None,
     _resume_vertices: DataFrame | None = None,
     _resume_messages: DataFrame | None = None,
-    _persist_registry: list[DataFrame] | None = None,
+    gear: LoopGear,
 ) -> DataFrame:
     """Run a Pregel computation; returns the final vertices DataFrame
     (engine columns dropped).
@@ -537,16 +519,11 @@ def _pregel_impl(
     # input time (edge store move, BspServiceWorker.java:611). The state
     # side stays hash-partitioned on id because checkpoint/localCheckpoint
     # preserves the physical partitioning from the inbox join.
-    nparts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    cur_n = nparts  # live gear; shrinks/grows with the frontier (see below)
-    v_floor: int | None = None  # computed lazily at the first gear decision
+    nparts = gear.ceiling
     prev_msg_count: int | None = None
-    reg = _persist_registry if _persist_registry is not None else []
 
     def _persist(df: DataFrame) -> DataFrame:
-        df = df.persist(storage_level)
-        reg.append(df)
-        return df
+        return gear.persist(df, storage_level)
 
     edges_by_src: DataFrame | None = None
     edges_by_dst: DataFrame | None = None
@@ -801,7 +778,7 @@ def _pregel_impl(
                 "superstep": superstep,
                 "vertices": ctx.num_vertices,
                 "messages": ctx.num_messages,
-                "partitions": cur_n,
+                "partitions": gear.cur,
                 "seconds": time.monotonic() - t0,
                 **(skew_row or {}),
             }
@@ -872,21 +849,14 @@ def _pregel_impl(
         #    2× hysteresis bounds state re-keys to O(log nparts) per run;
         #    each re-key exchange folds into the next superstep's job.
         if adaptive_partitions and new_messages is not None:
-            if v_floor is None:
-                v_floor = max(
-                    1,
-                    min(nparts, -(-vertices.count() // ROWS_PER_PARTITION)),
-                )
+            if gear.floor_rows is None:
+                gear.floor_rows = vertices.count()
+            width = gear.cur
             declining = prev_msg_count is not None and (
                 ctx.num_messages < prev_msg_count
             )
-            want = max(
-                v_floor, min(nparts, -(-ctx.num_messages // ROWS_PER_PARTITION))
-            )
-            if (want * 2 <= cur_n and declining) or want >= cur_n * 2:
-                cur_n = want
-                spark.conf.set("spark.sql.shuffle.partitions", str(cur_n))
-                vertices = vertices.repartition(cur_n, F.col(id_col))
+            if gear.resize(ctx.num_messages, declining) != width:
+                vertices = vertices.repartition(gear.cur, F.col(id_col))
             prev_msg_count = ctx.num_messages
 
     return vertices.drop(MSG, HAS_MSG, HALTED, ACTIVE)

@@ -78,3 +78,18 @@ def test_five_nodes_blocked(spark):
     ]
     got = _run(spark, [1, 2, 3, 4, 5], edges, 1)
     assert got == {1: False, 2: False, 3: False, 4: False, 5: True}
+
+
+def test_leaves_no_cached_frame(spark):
+    """Every frame bracha_toueg persists (edges, request groups, the
+    NOTIFY set) is released before it returns."""
+    spark.catalog.clearCache()
+    vdf = spark.createDataFrame([(i,) for i in (1, 2, 3)], "id long")
+    edf = spark.createDataFrame(
+        [(1, 2, 0), (1, 3, 1)], "src long, dst long, tag long"
+    )
+    out = bracha_toueg(Graph(vdf, edf), initiator=1)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert {r["id"]: r["is_free"] for r in out.collect()} == {
+        1: True, 2: True, 3: True
+    }

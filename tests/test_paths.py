@@ -61,12 +61,10 @@ def test_adaptive_gear_down_on_frontier_collapse(spark, monkeypatch):
     (lollipop graph: dense head floods early supersteps, then a long tail
     path sends one message per superstep), and the result is identical to
     a fixed-width run. ROWS_PER_PARTITION is patched down so a small graph
-    exercises the gear logic."""
-    import importlib
+    exercises the gear logic (the kernel's gear is plans.gear.LoopGear)."""
+    import giraph_spark.plans.gear as G
 
-    # giraph_spark re-exports the pregel FUNCTION; fetch the module itself
-    P = importlib.import_module("giraph_spark.pregel")
-    monkeypatch.setattr(P, "ROWS_PER_PARTITION", 20)
+    monkeypatch.setattr(G, "ROWS_PER_PARTITION", 20)
 
     head = [(i, j, 1.0) for i in range(10) for j in range(10) if i != j]
     tail = [(9, 100, 1.0)] + [(100 + i, 101 + i, 1.0) for i in range(15)]

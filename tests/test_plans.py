@@ -7,6 +7,7 @@ one executor)."""
 import contextlib
 import io
 
+import pytest
 from pyspark.sql import functions as F
 
 from giraph_spark.plans.fixtures import trade_graph
@@ -476,16 +477,20 @@ def test_fresh_checkpoint_count_one_job_and_flag(spark):
 def test_loop_gear_resizes_and_restores(spark):
     """LoopGear: disables AQE + resizes shuffle width with hysteresis
     for the loop's duration, restores both on exit (also on error); the
-    width never drops below the floor_rows requirement."""
-    from giraph_spark.plans.gear import LoopGear
-    from giraph_spark.pregel import ROWS_PER_PARTITION
+    width never drops below the floor_rows requirement nor rises above
+    the loop's width; the kernel's declining gate holds gear-down back;
+    persisted frames are released on any exit; ``window=False`` leaves
+    the conf alone."""
+    from giraph_spark.plans.gear import ROWS_PER_PARTITION, LoopGear
 
     conf = spark.conf
     parts0 = conf.get("spark.sql.shuffle.partitions")
     aqe0 = conf.get("spark.sql.adaptive.enabled")
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
     with LoopGear(spark) as gear:
         assert conf.get("spark.sql.adaptive.enabled") == "false"
-        assert gear.cur == int(parts0)
+        assert gear.cur == gear.ceiling == int(parts0)
         # collapse: gears down to 1 (floor None)
         assert gear.resize(10) == 1
         assert conf.get("spark.sql.shuffle.partitions") == "1"
@@ -495,17 +500,188 @@ def test_loop_gear_resizes_and_restores(spark):
         # floor: O(V) state rewrite keeps width up even when live -> 0
         gear.floor_rows = ROWS_PER_PARTITION * 3
         assert gear.resize(1) == 3
+        # hysteresis: within 2x of the current width nothing moves
+        assert gear.resize(ROWS_PER_PARTITION * 5) == 3
+        # the kernel's gate: no gear-down while the frontier grows
+        gear.floor_rows = None
+        assert gear.resize(1, declining=False) == 3
+        assert gear.resize(1) == 1
     assert conf.get("spark.sql.shuffle.partitions") == parts0
     assert conf.get("spark.sql.adaptive.enabled") == aqe0
-    # restores on exception too
-    try:
-        with LoopGear(spark) as gear:
+    # an explicit width is the ceiling; restores and releases on error too
+    with pytest.raises(RuntimeError, match="boom"):
+        with LoopGear(spark, width=3) as gear:
+            assert conf.get("spark.sql.shuffle.partitions") == "3"
+            assert gear.resize(ROWS_PER_PARTITION * 10_000) == 3
+            gear.persist(spark.range(10)).count()
+            assert not cache.isEmpty()
             gear.resize(5)
             raise RuntimeError("boom")
-    except RuntimeError:
-        pass
     assert conf.get("spark.sql.shuffle.partitions") == parts0
     assert conf.get("spark.sql.adaptive.enabled") == aqe0
+    assert cache.isEmpty()
+    # no window: the conf is untouched and resize is a no-op
+    with LoopGear(spark, window=False) as gear:
+        assert conf.get("spark.sql.adaptive.enabled") == aqe0
+        assert gear.resize(1) == int(parts0)
+        assert conf.get("spark.sql.shuffle.partitions") == parts0
+
+
+def test_loop_gear_round_rows(spark):
+    """LoopGear.round counts rounds into ``stats`` and logs one
+    ``per_round`` row each, in the shape of a PregelMetrics.supersteps
+    row; entering resets a reused ``stats`` dict."""
+    from giraph_spark.plans.gear import LoopGear
+
+    stats = {"rounds": 7, "per_round": ["stale"]}
+    with LoopGear(spark, stats=stats) as gear:
+        assert stats == {"rounds": 0, "per_round": []}
+        gear.round(1_000_000)
+        gear.round(10)
+    assert stats["rounds"] == 2
+    assert [r["round"] for r in stats["per_round"]] == [0, 1]
+    assert [r["live"] for r in stats["per_round"]] == [1_000_000, 10]
+    assert stats["per_round"][1]["partitions"] == 1
+    assert all(r["seconds"] >= 0 for r in stats["per_round"])
+    assert set(stats["per_round"][0]) == {"round", "live", "partitions", "seconds"}
+
+
+def _iso_graphs(spark):
+    """Tiny inputs for the round-loop isolation tests: a symmetric
+    weighted graph (a 6-cycle with two chords, distinct weights), a
+    bipartite graph, a directed graph with a 3-cycle, a wait-for graph
+    with request tags, a triangle with direction-dependent weights and a
+    4-vertex path."""
+    from giraph_spark import Graph
+
+    und = [(0, 1), (1, 2), (2, 3), (3, 4), (4, 5), (5, 0), (0, 2), (3, 5)]
+    rows = []
+    for k, (a, b) in enumerate(und):
+        rows += [(a, b, 1.0 + k), (b, a, 1.0 + k)]
+    v6 = spark.createDataFrame([(i,) for i in range(6)], "id long")
+    weighted = Graph(
+        v6, spark.createDataFrame(rows, "src long, dst long, weight double")
+    )
+    bipartite = Graph(
+        spark.createDataFrame([(i,) for i in (0, 1, 2, 10, 11, 12)], "id long"),
+        spark.createDataFrame(
+            [(0, 10), (0, 11), (1, 10), (2, 12), (2, 11)], "src long, dst long"
+        ),
+    )
+    directed = Graph(
+        v6,
+        spark.createDataFrame(
+            [(0, 1), (1, 2), (2, 0), (2, 3), (3, 4), (5, 4)], "src long, dst long"
+        ),
+    )
+    wait_for = Graph(
+        spark.createDataFrame([(i,) for i in (1, 2, 3)], "id long"),
+        spark.createDataFrame(
+            [(1, 2, 0), (1, 3, 1)], "src long, dst long, tag long"
+        ),
+    )
+    # direction-dependent weights: 0 picks 1, 1 picks 2, 2 picks 0
+    cyc = [(0, 1, 3.0), (1, 0, 1.0), (1, 2, 3.0), (2, 1, 1.0), (2, 0, 3.0), (0, 2, 1.0)]
+    asymmetric = Graph(
+        spark.createDataFrame([(i,) for i in range(3)], "id long"),
+        spark.createDataFrame(cyc, "src long, dst long, weight double"),
+    )
+    # a path: k=2 / s=1.5 peel its ends first, a second round is needed
+    path = [(0, 1), (1, 2), (2, 3)]
+    path_rows = [(a, b, 1.0) for a, b in path] + [(b, a, 1.0) for a, b in path]
+    path_g = Graph(
+        spark.createDataFrame([(i,) for i in range(4)], "id long"),
+        spark.createDataFrame(path_rows, "src long, dst long, weight double"),
+    )
+    return {
+        "weighted": weighted,
+        "bipartite": bipartite,
+        "directed": directed,
+        "wait_for": wait_for,
+        "asymmetric": asymmetric,
+        "path": path_g,
+    }
+
+
+_ROUNDLOOPS = (
+    "minimum_spanning_forest",
+    "max_weight_matching",
+    "bipartite_matching",
+    "graph_coloring",
+    "maximal_independent_set",
+)
+
+# (loop, input graph, kwargs, expected exception or None)
+_ISOLATION_CASES = [
+    ("minimum_spanning_forest", "weighted", {}, None),
+    ("max_weight_matching", "weighted", {}, None),
+    ("bipartite_matching", "bipartite", {}, None),
+    ("graph_coloring", "weighted", {}, None),
+    ("maximal_independent_set", "weighted", {}, None),
+    ("k_truss", "weighted", {"k": 3}, None),
+    ("scc", "directed", {}, None),
+    ("bracha_toueg", "wait_for", {"initiator": 1}, None),
+    ("k_core", "weighted", {"k": 2}, None),
+    ("s_core", "weighted", {"s": 2.0}, None),
+    ("sssp", "weighted", {"source": 0}, None),
+    ("max_weight_matching", "asymmetric", {}, ValueError),
+    ("k_core", "path", {"k": 2, "max_rounds": 1}, RuntimeError),
+    ("s_core", "path", {"s": 1.5, "max_rounds": 1}, RuntimeError),
+    ("k_truss", "weighted", {"k": 4, "max_rounds": 1}, RuntimeError),
+]
+
+
+def _algo(name):
+    from giraph_spark import algos
+    from giraph_spark.algos import components
+
+    return getattr(algos, name, None) or getattr(components, name)
+
+
+@pytest.mark.parametrize(
+    "fn,graph,kwargs,raises",
+    _ISOLATION_CASES,
+    ids=[f"{c[0]}-{c[1]}" for c in _ISOLATION_CASES],
+)
+def test_round_loop_leaves_session_as_found(spark, fn, graph, kwargs, raises):
+    """Every round loop on the LoopGear primitive (and the kernel)
+    leaves the session as it found it, on success and on a raise: the
+    shuffle width and AQE setting are restored and no DataFrame stays
+    cached."""
+    g = _iso_graphs(spark)[graph]
+    conf = spark.conf
+    before = (
+        conf.get("spark.sql.shuffle.partitions"),
+        conf.get("spark.sql.adaptive.enabled"),
+    )
+    spark.catalog.clearCache()
+    call = _algo(fn)
+    if raises is None:
+        out = call(g, **kwargs)
+    else:
+        with pytest.raises(raises):
+            call(g, **kwargs)
+    after = (
+        conf.get("spark.sql.shuffle.partitions"),
+        conf.get("spark.sql.adaptive.enabled"),
+    )
+    assert after == before
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    if raises is None:
+        assert out.count() >= 0  # the lazy result still evaluates
+
+
+@pytest.mark.parametrize("fn", _ROUNDLOOPS)
+def test_round_loops_log_one_row_per_round(spark, fn):
+    """The five round loops the benchmark's roundloops workload runs
+    log one ``per_round`` row per counted round."""
+    graphs = _iso_graphs(spark)
+    g = graphs["bipartite" if fn == "bipartite_matching" else "weighted"]
+    stats: dict = {}
+    _algo(fn)(g, stats=stats)
+    assert stats["rounds"] >= 1
+    assert len(stats["per_round"]) == stats["rounds"]
+    assert [r["round"] for r in stats["per_round"]] == list(range(stats["rounds"]))
 
 
 def test_bcast_if_small_plan_shapes(spark):

@@ -24,3 +24,17 @@ def test_scc_all_singletons_dag(spark):
     edges = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
     got = {r["id"]: r["scc"] for r in scc(Graph(vertices, edges)).collect()}
     assert got == {1: 1, 2: 2, 3: 3}
+
+
+def test_scc_superstep_cap_raises_and_releases_cache(spark):
+    """A reversed path longer than max_supersteps cannot converge: the
+    forward traversal must raise, and the edge frames scc persisted must
+    not stay cached."""
+    spark.catalog.clearCache()
+    vertices = spark.createDataFrame([(i,) for i in range(8)], "id long")
+    edges = spark.createDataFrame(
+        [(i + 1, i) for i in range(7)], "src long, dst long"
+    )
+    with pytest.raises(RuntimeError, match="max_supersteps"):
+        scc(Graph(vertices, edges), max_supersteps=3)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
