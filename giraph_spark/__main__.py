@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from .graph import Graph
 from .pregel import PregelMetrics
+from .session import spark_session
 
 
 def _with_seed_vertices(fn):
@@ -251,14 +252,9 @@ def main(argv: list[str] | None = None) -> int:
         else:
             params[k] = _parse_literal(v)
 
-    spark = (
-        SparkSession.builder.master(args.master)
-        .appName(f"giraph-spark:{args.algorithm}")
-        .config("spark.sql.shuffle.partitions", str(args.shuffle_partitions))
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
+    spark = spark_session(
+        f"giraph-spark:{args.algorithm}", args.master, args.shuffle_partitions
     )
-    spark.sparkContext.setLogLevel("WARN")
     t0 = time.monotonic()
     graph = load_graph_cli(spark, args)
     metrics = PregelMetrics()

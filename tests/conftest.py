@@ -5,25 +5,14 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
+from giraph_spark.session import spark_session
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
 
 
 @pytest.fixture(scope="session")
 def spark():
-    s = (
-        SparkSession.builder.master("local[4]")
-        .appName("giraph-spark-tests")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", "6g")
-        .getOrCreate()
-    )
-    s.sparkContext.setLogLevel("WARN")
+    s = spark_session("giraph-spark-tests", "local[4]", 8, driver_memory="6g")
     yield s
     s.stop()
 

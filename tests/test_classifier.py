@@ -153,10 +153,9 @@ def test_cross_session_score_determinism(spark, labeled, tmp_path):
     script = tmp_path / "rescore.py"
     script.write_text(
         "import sys\n"
-        "from pyspark.sql import SparkSession, functions as F\n"
-        "spark = (SparkSession.builder.master('local[2]')\n"
-        "         .config('spark.sql.shuffle.partitions', '2')\n"
-        "         .config('spark.ui.enabled', 'false').getOrCreate())\n"
+        "from pyspark.sql import functions as F\n"
+        "from giraph_spark.session import spark_session\n"
+        "spark = spark_session('rescore', 'local[2]', 2)\n"
         "from giraph_spark.functions.classifier import (\n"
         "    QualityClassifier, score_quality_classifier)\n"
         "clf = QualityClassifier.load(sys.argv[1])\n"
