@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from ..graph import Graph
 from ..pregel import MSG, PregelMetrics, pregel
 from ..plans.checkpoint import fresh_checkpoint
-from ..plans.gear import LoopGear
+from ..plans.gear import LoopGear, fit_width
 
 
 def _label_propagation(
@@ -107,13 +107,11 @@ def wcc(
     from .prepare import symmetrize
 
     sym = symmetrize(graph)
-    sym.edges.persist()
-    try:
+    with LoopGear(sym.edges.sparkSession, window=False) as gear:
+        gear.persist(sym.edges)
         return connected_components(
             sym, max_supersteps, metrics, component_col, **pregel_kwargs
         )
-    finally:
-        sym.edges.unpersist()
 
 
 def alternating_star_components(
@@ -144,8 +142,6 @@ def alternating_star_components(
     sort/except join. Lineage is truncated per round (localCheckpoint),
     the same plan-growth discipline as the pregel loop.
     """
-    from ..pregel import _auto_partitions
-
     spark = graph.vertices.sparkSession
     id_col, src_col, dst_col = graph.id_col, graph.src_col, graph.dst_col
 
@@ -154,7 +150,7 @@ def alternating_star_components(
     parts_before = spark.conf.get("spark.sql.shuffle.partitions", "200")
     spark.conf.set(
         "spark.sql.shuffle.partitions",
-        str(_auto_partitions(graph, int(parts_before))),
+        str(fit_width(graph.edges.count(), int(parts_before))),
     )
     try:
         return _alternating_star_impl(
@@ -475,19 +471,6 @@ def core_numbers(
     from .prepare import symmetrize
 
     id_col, src_col, dst_col = graph.id_col, graph.src_col, graph.dst_col
-    sym = symmetrize(graph, dedup=True)
-    sym_edges = sym.edges.select(src_col, dst_col).persist()
-    deg = sym_edges.groupBy(F.col(src_col).alias(id_col)).agg(
-        F.count(F.lit(1)).cast("int").alias("_deg")
-    )
-    vertices = (
-        graph.vertices.select(id_col)
-        .join(deg, id_col, "left")
-        .select(
-            id_col, F.coalesce("_deg", F.lit(0)).cast("int").alias("_deg")
-        )
-    )
-    g = Graph(vertices, sym_edges, id_col, src_col, dst_col)
     w0 = max(1, int(initial_width))
 
     def combine_for(ctx):
@@ -538,29 +521,41 @@ def core_numbers(
         if ctx.superstep > 0 and int(ctx.aggregates.get("changes") or 0) == 0:
             ctx.halt()
 
-    out = pregel(
-        g,
-        initial={
-            "core": F.col("_deg"),
-            "_chg": F.lit(1).cast("int"),
-            "_sat": F.lit(0).cast("int"),
-        },
-        update=update_for,
-        send_msg=F.col("core"),
-        combine_fn=combine_for,
-        msg_type="array<bigint>",  # the POST-combine inbox type (count array)
-        aggregates={
-            "changes": F.sum("_chg"),
-            "saturated": F.sum("_sat"),
-            "max_core": F.max("core"),
-        },
-        master_fn=master,
-        max_supersteps=max_supersteps,
-        metrics=metrics,
-        **pregel_kwargs,
-    )
-    sym_edges.unpersist()
-    return out.select(id_col, F.col("core").cast("long").alias("core"))
+    sym = symmetrize(graph, dedup=True)
+    with LoopGear(graph.vertices.sparkSession, window=False) as gear:
+        sym_edges = gear.persist(sym.edges.select(src_col, dst_col))
+        deg = sym_edges.groupBy(F.col(src_col).alias(id_col)).agg(
+            F.count(F.lit(1)).cast("int").alias("_deg")
+        )
+        vertices = (
+            graph.vertices.select(id_col)
+            .join(deg, id_col, "left")
+            .select(
+                id_col, F.coalesce("_deg", F.lit(0)).cast("int").alias("_deg")
+            )
+        )
+        out = pregel(
+            Graph(vertices, sym_edges, id_col, src_col, dst_col),
+            initial={
+                "core": F.col("_deg"),
+                "_chg": F.lit(1).cast("int"),
+                "_sat": F.lit(0).cast("int"),
+            },
+            update=update_for,
+            send_msg=F.col("core"),
+            combine_fn=combine_for,
+            msg_type="array<bigint>",  # the POST-combine inbox type (count array)
+            aggregates={
+                "changes": F.sum("_chg"),
+                "saturated": F.sum("_sat"),
+                "max_core": F.max("core"),
+            },
+            master_fn=master,
+            max_supersteps=max_supersteps,
+            metrics=metrics,
+            **pregel_kwargs,
+        )
+        return out.select(id_col, F.col("core").cast("long").alias("core"))
 
 
 def label_propagation_communities(
@@ -640,11 +635,10 @@ def label_propagation_communities(
     # edges here or every round re-executes their full upstream lineage
     # (e.g. trade_graph's lineitem⋈orders join, rounds+1 times)
     edge_cols = [src_col, dst_col] + ([weight_col] if weight_col else [])
-    cached_edges = graph.edges.select(*edge_cols).persist()
-    g = Graph(graph.vertices, cached_edges, id_col, src_col, dst_col)
-    try:
+    with LoopGear(graph.vertices.sparkSession, window=False) as gear:
+        cached_edges = gear.persist(graph.edges.select(*edge_cols))
         out = pregel(
-            g,
+            Graph(graph.vertices, cached_edges, id_col, src_col, dst_col),
             initial={community_col: F.col(id_col).cast("long")},
             update={
                 community_col: F.coalesce(-F.col(MSG)["neg"], F.col(community_col))
@@ -664,5 +658,3 @@ def label_propagation_communities(
         return out.select(
             id_col, F.col(community_col).cast("long").alias(community_col)
         ).localCheckpoint(eager=True)
-    finally:
-        cached_edges.unpersist()

@@ -39,7 +39,7 @@ def sssp(
     inbox (map-side partial min = Giraph's message combiner, free from
     Catalyst) plus the triplet join keyed on vertex id. The active set
     shrinks monotonically once the frontier passes; the kernel's adaptive
-    gear-down (``pregel(adaptive_partitions=True)``) shrinks the loop's
+    gear-down (``plans.gear.LoopGear.resize``) shrinks the loop's
     shuffle width with it, so tail supersteps don't pay full-width task
     counts for near-empty frontiers.
     """

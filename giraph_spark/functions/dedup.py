@@ -407,7 +407,7 @@ def pairs_to_clusters(
     from ..algos.components import connected_components
     from ..graph import Graph
     from ..plans.checkpoint import fresh_checkpoint_count
-    from ..pregel import ROWS_PER_PARTITION
+    from ..plans.gear import fit_width
 
     # materialize the (tiny) pair relation once: the derivations below
     # would otherwise re-run the generator's banded self-join + compare
@@ -419,10 +419,10 @@ def pairs_to_clusters(
         pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
     ).dropDuplicates(["src", "dst"])
     sym.persist()  # the kernel's edge cache + members read it once each
-    conf_parts = int(
-        pairs.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
+    nparts = fit_width(
+        2 * n_pairs,
+        int(pairs.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")),
     )
-    nparts = max(1, min(conf_parts, -(-2 * n_pairs // ROWS_PER_PARTITION)))
     try:
         members = sym.select(F.col("src").alias("id")).distinct()
         comp = connected_components(

@@ -24,10 +24,10 @@ the per-superstep state with one action and truncates its lineage EVERY
 superstep via ``localCheckpoint`` (single-reference conditional update, so
 per-superstep plan size is constant; a filter+union formulation grows as
 3^superstep and OOMs the driver around superstep 6 — observed empirically).
-With ``checkpoint_dir`` set, every ``checkpoint_every``-th superstep uses a
-reliable ``checkpoint()`` instead, which both survives executor loss and
-lets long jobs resume (Giraph's CHECKPOINT_FREQUENCY,
-``conf/GiraphConstants.java:927``).
+Durability is separate from truncation: with ``state_checkpoint_dir`` set,
+every ``checkpoint_every``-th superstep's vertices and in-flight messages
+are written as parquet, which :func:`resume_pregel` restarts from (Giraph's
+CHECKPOINT_FREQUENCY, ``conf/GiraphConstants.java:927``).
 """
 
 from __future__ import annotations
@@ -43,12 +43,20 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .graph import Graph
-from .plans.gear import ROWS_PER_PARTITION, LoopGear
+from .plans.gear import LoopGear, fit_width
 
 MSG = "_msg"
 HAS_MSG = "_has_msg"
 HALTED = "_halted"
 ACTIVE = "_gs_active"
+
+# The skew response (``skew_metrics``): a superstep whose largest inbox
+# group exceeds SKEW_FACTOR x the median arms a salted delivery over
+# SKEW_SALTS reducers for the next superstep, when its combiner is one of
+# these self-decomposable aggregates (cmb(cmb(part), ...) == cmb(all)).
+SKEW_FACTOR = 32.0
+SKEW_SALTS = 16
+_SELF_DECOMPOSABLE = (F.sum, F.min, F.max)
 
 # A kernel parameter may be a Column / dict of Columns, or a callable
 # receiving the PregelContext (for superstep- or broadcast-dependent
@@ -65,7 +73,6 @@ class PregelContext:
     broadcasts: dict[str, Any] = field(default_factory=dict)
     aggregates: dict[str, Any] = field(default_factory=dict)
     num_messages: int = 0
-    num_vertices: int = 0
     #: current (post-update) vertices DataFrame, readable from ``master_fn``
     #: — the per-superstep output hook (``DO_OUTPUT_DURING_COMPUTATION``,
     #: ``conf/GiraphConstants.java:361``): a master_fn may
@@ -82,7 +89,7 @@ class PregelContext:
 @dataclass
 class PregelMetrics:
     """Per-superstep counters — analog of ``counters/GiraphStats.java:39-51``
-    (supersteps, sent messages, vertices) + ``GiraphTimers``.
+    (supersteps, sent messages) + ``GiraphTimers``.
 
     With ``capture_plans=True`` the formatted physical plan of each
     superstep's send job is recorded into ``plans`` — the observability
@@ -109,23 +116,6 @@ def _resolve(expr: Any, ctx: PregelContext) -> Any:
     return expr(ctx) if callable(expr) and not isinstance(expr, Column) else expr
 
 
-def _auto_partitions(graph: Graph, conf_parts: int) -> int:
-    """Size the run's shuffle-partition count from the graph, bounded
-    above by the session's ``spark.sql.shuffle.partitions`` (the
-    cluster-scale ceiling the user configured). Giraph sizes partition
-    count from the worker fleet (``USER_PARTITION_COUNT`` default
-    workers², ``conf/GiraphConstants.java:914``); a DataFrame loop wants
-    it sized from the *data*: at small scale, per-task scheduling
-    overhead dominates (measured: PageRank sf0.1 runs 3× faster on 8
-    partitions than 32 on a 32-core local box), while at cluster scale
-    ``ceil(edges / ROWS_PER_PARTITION)`` exceeds any sane ceiling and
-    the session setting governs. The one edge count this costs per run
-    is Giraph's input-superstep edge count (``GiraphStats``); on a
-    persisted graph it is a cached-count no-op."""
-    edge_rows = graph.edges.count()
-    return max(1, min(conf_parts, -(-edge_rows // ROWS_PER_PARTITION)))
-
-
 def pregel(graph: Graph, num_partitions: int | None = None, **kwargs) -> DataFrame:
     """Run a Pregel computation; returns the final vertices DataFrame.
     See :func:`_pregel_impl` for the full parameter reference (identical
@@ -144,11 +134,9 @@ def pregel(graph: Graph, num_partitions: int | None = None, **kwargs) -> DataFra
     structurally bounding skew (and :func:`giraph_spark.partitioning.salt_heavy_keys`
     covers the combiner-less case).
 
-    ``num_partitions`` fixes the loop's shuffle-partition count; the
-    default auto-sizes it from the edge count (:func:`_auto_partitions`),
-    standing in for the coalescing AQE would have done. The session's
-    ``spark.sql.shuffle.partitions`` is set to the chosen value for the
-    duration of the run (and restored), so every loop shuffle — inbox
+    The run's width (``num_partitions``, see :func:`_pregel_impl`)
+    becomes the session's ``spark.sql.shuffle.partitions`` for the
+    duration of the run (and is restored), so every loop shuffle — inbox
     groupBy, co-partitioned joins, the cached edge repartition — agrees
     on one partitioning and the state side stays exchange-free.
 
@@ -172,8 +160,11 @@ def pregel(graph: Graph, num_partitions: int | None = None, **kwargs) -> DataFra
         # the loop partitioning and the input repartition disappears
         nparts = graph.edges_layout[1]
     else:
-        nparts = _auto_partitions(
-            graph, int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+        # one edge count per run (Giraph's input-superstep count); on a
+        # persisted graph it is a cached-count no-op
+        nparts = fit_width(
+            graph.edges.count(),
+            int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
         )
     # The gear releases every frame the run persists on ANY exit — normal
     # return, master_fn exception, executor loss. Without this, a failed
@@ -181,7 +172,7 @@ def pregel(graph: Graph, num_partitions: int | None = None, **kwargs) -> DataFra
     # the cached edge relation + message frames in the block manager, and
     # retries would stack copies until OOM.
     with LoopGear(spark, width=nparts) as gear:
-        return _pregel_impl(graph, gear=gear, **kwargs)
+        return _pregel_impl(graph, _gear=gear, **kwargs)
 
 
 def _hadoop_fs(spark, path: str):
@@ -307,13 +298,7 @@ def resume_pregel(graph: Graph, state_checkpoint_dir: str, **kwargs) -> DataFram
         else None
     )
     kwargs.setdefault("state_checkpoint_dir", state_checkpoint_dir)
-    return pregel(
-        graph,
-        start_superstep=last + 1,
-        _resume_vertices=vdf,
-        _resume_messages=mdf,
-        **kwargs,
-    )
+    return pregel(graph, _resume=(last + 1, vdf, mdf), **kwargs)
 
 
 def _pregel_impl(
@@ -331,27 +316,34 @@ def _pregel_impl(
     aggregates: dict[str, Expr] | None = None,
     master_fn: Callable[[PregelContext], None] | None = None,
     skew_metrics: bool = False,
-    combine_algebraic: bool = False,
-    skew_factor: float = 32.0,
-    skew_salts: int = 16,
-    halt_file: str | None = None,
     max_supersteps: int = 100,
-    start_superstep: int = 0,
-    adaptive_partitions: bool = True,
     checkpoint_every: int = 6,
-    checkpoint_dir: str | None = None,
     state_checkpoint_dir: str | None = None,
-    storage_level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
     metrics: PregelMetrics | None = None,
-    _resume_vertices: DataFrame | None = None,
-    _resume_messages: DataFrame | None = None,
-    gear: LoopGear,
+    _resume: tuple[int, DataFrame, DataFrame | None] | None = None,
+    _gear: LoopGear,
 ) -> DataFrame:
     """Run a Pregel computation; returns the final vertices DataFrame
     (engine columns dropped).
 
     Parameters
     ----------
+    num_partitions:
+        (:func:`pregel` only) the loop's shuffle-partition count. The
+        default adopts a bucketed input layout's width, else sizes it
+        from the edge count (:func:`giraph_spark.plans.gear.fit_width`,
+        bounded by the session's ``spark.sql.shuffle.partitions``) —
+        the coalescing AQE would have done. It is the ceiling of the
+        adaptive gear: after a
+        superstep whose message count implies a width ≥2× smaller (on a
+        declining frontier) or larger, the session shuffle setting is
+        changed and the vertex state re-keyed once at the new width
+        (:meth:`giraph_spark.plans.gear.LoopGear.resize`, never below what
+        the per-superstep O(V) state rewrite needs). SSSP/BFS/WCC
+        frontiers shrink by orders of magnitude in their tail supersteps,
+        and without AQE (which must stay off in-loop) every tail superstep
+        would otherwise pay the full-width task count for near-empty
+        shuffles. The cached edge relation keeps the run's width.
     update:
         dict of ``{column: expression}`` evaluated simultaneously over the
         active vertices (all expressions see the *pre-update* values, i.e.
@@ -405,6 +397,10 @@ def _pregel_impl(
         boolean expression evaluated *after* ``update`` (sees new values);
         true ⇒ vertex halts (``Vertex.voteToHalt``, re-activated by any
         inbound message).
+    msg_type:
+        Spark SQL type of ``_msg`` (the post-combine inbox), used to type
+        the all-NULL ``_msg`` of a superstep with no inbox (superstep 0)
+        so ``update`` resolves against the same schema every superstep.
     aggregates:
         named global aggregate expressions computed over the updated
         vertices each superstep, collected to the driver into
@@ -417,67 +413,40 @@ def _pregel_impl(
         when true, the per-superstep message count is computed as an
         aggregate over per-destination group sizes instead of a flat
         count, and each ``metrics.supersteps`` row gains
-        ``max_inbox_group`` / ``median_inbox_group`` — the in-loop skew
-        observability a 100× user needs to decide when to reach for
-        :func:`giraph_spark.partitioning.salt_heavy_keys` (a hot vertex
-        is a hot key in the delivery shuffle; max ≫ median is the salt
+        ``max_inbox_group`` / ``median_inbox_group`` / ``salted`` — the
+        in-loop skew observability a 100× user needs (a hot vertex is a
+        hot key in the delivery shuffle; max ≫ median is the salt
         signal). Still one action per superstep, but the extra
         ``groupBy(_dst)`` pre-pays the delivery shuffle's cost a second
         time — diagnostic mode, off by default. The reference gets the
         equivalent from per-worker received-message counters
-        (``counters/GiraphStats.java:39-51`` + per-superstep counters,
-        ``conf/GiraphConstants.java:846``).
-    combine_algebraic / skew_factor / skew_salts:
-        the closed skew loop (observation → response, ≡ Giraph's
-        rebalance-on-observation, ``partition/PartitionBalancer.java:357``
-        / ``PartitionExchange.java``). Requires ``skew_metrics=True``.
-        When a superstep observes ``max_inbox_group > skew_factor ×
-        max(median_inbox_group, 1)`` — a hot vertex — the NEXT
-        superstep's delivery runs a two-phase salted aggregation:
-        ``groupBy(_dst, _salt)`` partials (hot key spread over
-        ``skew_salts`` reducers) merged by the normal ``groupBy(_dst)``.
-        This is sound ONLY for self-decomposable combiners —
-        ``cmb(cmb(partition), …) == cmb(all)``: sum/min/max/bool —
-        so it activates only when the caller declares
-        ``combine_algebraic=True``; ``count``-style combiners (merge is
-        sum, not count) and the combiner-less ``collect_list`` inbox do
-        NOT qualify, and a hot-key observation there emits a one-shot
-        warning naming :func:`giraph_spark.partitioning.salt_heavy_keys`
-        and the bounded-combiner redesign
-        (``algos.components.core_numbers``'s threshold-count message is
-        the in-repo example). Why this matters even though map-side
-        partial aggregation already combines per map partition: the hot
-        vertex's FINAL merge otherwise receives one partial per map
-        partition — tens of thousands of rows in a single task on a
-        1000-executor cluster — where the salted phase bounds it to
-        ``skew_salts``. The trigger re-evaluates every superstep, so the
-        extra phase disappears as soon as the frontier de-skews.
-    halt_file:
-        out-of-band stop signal — the analog of ``bin/halt-application``
-        writing the halt znode (``master/BspServiceMaster.java:1685-1691``):
-        a path (any Hadoop-reachable filesystem) checked once per
-        superstep; if it exists, the file is consumed (deleted) and the
-        run halts cleanly after the current superstep, leaving state
-        resumable via durable checkpoints. Defaults to
-        ``{state_checkpoint_dir}/HALT`` when ``state_checkpoint_dir`` is
-        set. Request a halt from outside the driver with
-        :func:`request_halt`.
-    adaptive_partitions:
-        when true (default), the loop re-sizes its shuffle-partition count
-        from the live message volume: after a superstep whose
-        ``num_messages`` implies a partition count ≥2× smaller (or larger)
-        than the current one, the session shuffle setting is changed and
-        the vertex state re-keyed once at the new width. This is the
-        frontier-collapse optimization: SSSP/BFS/WCC frontiers shrink by
-        orders of magnitude in their tail supersteps, and without AQE
-        (which must stay off in-loop) every tail superstep would otherwise
-        pay the full-width task count for near-empty shuffles — at cluster
-        scale, tens of thousands of empty tasks per superstep. The 2×
-        hysteresis bounds re-key shuffles to O(log width) per run; the
-        cached edge relation keeps its original width (EnsureRequirements
-        re-shuffles the tiny frontier side up to meet it, never the edges).
-        Mirrors the adaptive compute-thread/partition sizing Giraph gets
-        from per-worker message stores draining in place.
+        (``counters/GiraphStats.java:39-51``).
+
+        It also closes the skew loop (observation → response, ≡ Giraph's
+        rebalance-on-observation, ``partition/PartitionBalancer.java:357``):
+        when a superstep observes ``max_inbox_group > SKEW_FACTOR ×
+        max(median_inbox_group, 1)``, the NEXT superstep's delivery runs a
+        two-phase salted aggregation — ``groupBy(_dst, _salt)`` partials
+        (the hot key spread over ``SKEW_SALTS`` reducers) merged by the
+        normal ``groupBy(_dst)`` — bounding the hot vertex's final merge,
+        which otherwise receives one partial per map partition. This is
+        sound only for self-decomposable combiners, so it engages only
+        when that superstep's combiner is ``F.sum``, ``F.min`` or
+        ``F.max``; any other combiner (``count``-style, whose merge is
+        not itself, an opaque callable, or the combiner-less
+        ``collect_list`` inbox) gets a one-shot warning naming
+        :func:`giraph_spark.partitioning.salt_heavy_keys` and the
+        bounded-combiner redesign (``algos.components.core_numbers``'s
+        threshold-count message). The trigger re-evaluates every
+        superstep, so the extra phase disappears once the frontier
+        de-skews.
+    max_supersteps:
+        superstep cap (counted from 0, across a resume); the run stops
+        after it even if vertices are still active.
+    checkpoint_every:
+        the durable-checkpoint cadence below; every ``checkpoint_every``-th
+        superstep also drops the driver's py4j references
+        (``gc.collect()``) so dead checkpoint blocks are freed promptly.
     state_checkpoint_dir:
         when set, every ``checkpoint_every``-th superstep the post-update
         vertex state AND the in-flight messages are written as parquet under
@@ -486,16 +455,32 @@ def _pregel_impl(
         ``BspServiceWorker.java:1340``; cadence ``CHECKPOINT_FREQUENCY``,
         ``conf/GiraphConstants.java:927``). Restart with
         :func:`resume_pregel` (≡ ``loadCheckpoint``,
-        ``BspServiceWorker.java:1584``).
+        ``BspServiceWorker.java:1584``). The run also watches the sentinel
+        ``{dir}/HALT`` once per superstep — the analog of
+        ``bin/halt-application`` writing the halt znode
+        (``master/BspServiceMaster.java:1685-1691``): if it exists it is
+        consumed (deleted) and the run halts cleanly after the current
+        superstep, resumable from its durable checkpoints. Request a halt
+        from outside the driver with :func:`request_halt`.
+    metrics:
+        a :class:`PregelMetrics` that receives one row per superstep
+        (``superstep``, ``messages``, ``partitions``, ``seconds``, plus
+        the ``skew_metrics`` fields) and the run-level ``run_info``.
     """
     ctx = PregelContext()
     metrics = metrics if metrics is not None else PregelMetrics()
 
     id_col, src_col, dst_col = graph.id_col, graph.src_col, graph.dst_col
 
-    if _resume_vertices is not None:
-        vertices = _resume_vertices  # engine columns included in the save
+    if _resume is not None:
+        # restart path (Giraph's ``BspServiceWorker.loadCheckpoint``): the
+        # saved state, engine columns included, and in-flight messages;
+        # the superstep counter resumes where it left off, so
+        # superstep-indexed logic (fixed-iteration PageRank, phase
+        # machines) continues correctly
+        start, vertices, messages = _resume
     else:
+        start, messages = 0, None
         vertices = graph.vertices
         if initial:
             vertices = vertices.withColumns(
@@ -506,11 +491,6 @@ def _pregel_impl(
 
     edges = graph.edges
     spark = vertices.sparkSession
-    if checkpoint_dir:
-        spark.sparkContext.setCheckpointDir(checkpoint_dir)
-    halt_path = halt_file
-    if halt_path is None and state_checkpoint_dir:
-        halt_path = f"{state_checkpoint_dir}/HALT"
 
     # Pre-partition the (static) edge relation by its join key ONCE and
     # keep it cached: every superstep's triplet join then sees a
@@ -519,11 +499,13 @@ def _pregel_impl(
     # input time (edge store move, BspServiceWorker.java:611). The state
     # side stays hash-partitioned on id because checkpoint/localCheckpoint
     # preserves the physical partitioning from the inbox join.
-    nparts = gear.ceiling
+    nparts = _gear.ceiling
     prev_msg_count: int | None = None
 
-    def _persist(df: DataFrame) -> DataFrame:
-        return gear.persist(df, storage_level)
+    def persist(df: DataFrame) -> DataFrame:
+        # serialized in memory (PySpark's MEMORY_AND_DISK), not the
+        # DataFrame default MEMORY_AND_DISK_DESER the other loops use
+        return _gear.persist(df, StorageLevel.MEMORY_AND_DISK)
 
     edges_by_src: DataFrame | None = None
     edges_by_dst: DataFrame | None = None
@@ -532,34 +514,28 @@ def _pregel_impl(
             if graph.edges_layout == (src_col, nparts):
                 # bucketed storage already hash-partitions edges on src at
                 # the loop width: cache the scan as-is, zero input shuffle
-                edges_by_src = _persist(edges)
+                edges_by_src = persist(edges)
                 metrics.run_info["edges_from_storage_layout"] = True
             else:
-                edges_by_src = _persist(edges.repartition(nparts, F.col(src_col)))
+                edges_by_src = persist(edges.repartition(nparts, F.col(src_col)))
         if send_msg_to_src is not None:
-            edges_by_dst = _persist(edges.repartition(nparts, F.col(dst_col)))
+            edges_by_dst = persist(edges.repartition(nparts, F.col(dst_col)))
 
-    if _resume_vertices is None and graph.vertices_layout == (id_col, nparts):
-        vertices = _persist(vertices)
+    if _resume is None and graph.vertices_layout == (id_col, nparts):
+        vertices = persist(vertices)
         metrics.run_info["vertices_from_storage_layout"] = True
     else:
-        vertices = _persist(vertices.repartition(nparts, F.col(id_col)))
-    messages: DataFrame | None = None
-    if _resume_messages is not None:
-        messages = _persist(_resume_messages)
+        vertices = persist(vertices.repartition(nparts, F.col(id_col)))
+    if messages is not None:
+        messages = persist(messages)
     prev_vertices: DataFrame | None = None
     prev_messages: DataFrame | None = None
-    salt_next = False   # armed by a hot-key observation (skew_metrics)
+    hot_row: dict[str, Any] | None = None  # a hot-key observation (skew_metrics)
     skew_warned = False
 
     null_msg = F.lit(None).cast(msg_type) if msg_type else F.lit(None)
 
-    # start_superstep > 0 = restart path (Giraph's restart-from-checkpoint,
-    # ``BspServiceWorker.loadCheckpoint``): the caller passes the saved
-    # vertices as graph.vertices / ``initial`` and the superstep counter
-    # resumes where it left off, so superstep-indexed logic (fixed-iteration
-    # PageRank, phase machines) continues correctly.
-    for superstep in range(start_superstep, max_supersteps):
+    for superstep in range(start, max_supersteps):
         ctx.superstep = superstep
         t0 = time.monotonic()
 
@@ -573,20 +549,20 @@ def _pregel_impl(
             cmb = combine_fn(ctx) if combine_fn is not None else combine
             agg = (cmb(F.col("_m")) if cmb else F.collect_list("_m")).alias(MSG)
             src_msgs = messages
-            if salt_next and cmb is not None and combine_algebraic:
+            if hot_row is not None and cmb in _SELF_DECOMPOSABLE:
                 # Two-phase salted delivery (skew response): phase 1
-                # spreads the hot dst over skew_salts reducers; phase 2
-                # (the normal groupBy below) merges <= skew_salts
-                # partials per dst. Sound because the caller declared
-                # the combiner self-decomposable; result is independent
-                # of the salt assignment, so the salt only needs spread,
-                # not determinism.
+                # spreads the hot dst over SKEW_SALTS reducers; phase 2
+                # (the normal groupBy below) merges <= SKEW_SALTS
+                # partials per dst. Sound because the combiner is
+                # self-decomposable; result is independent of the salt
+                # assignment, so the salt only needs spread, not
+                # determinism.
                 src_msgs = (
                     messages.withColumn(
                         "_salt",
                         F.pmod(
                             F.xxhash64(F.col("_m")) + F.spark_partition_id(),
-                            F.lit(skew_salts),
+                            F.lit(SKEW_SALTS),
                         ),
                     )
                     .groupBy("_dst", "_salt")
@@ -594,6 +570,19 @@ def _pregel_impl(
                     .drop("_salt")
                 )
                 salted_this = True
+            elif hot_row is not None and not skew_warned:
+                skew_warned = True
+                warnings.warn(
+                    "pregel: hot destination observed "
+                    f"(max_inbox_group={hot_row['max_inbox_group']} > "
+                    f"{SKEW_FACTOR}x median={hot_row['median_inbox_group']}); "
+                    "the salted delivery engages only for the F.sum, F.min "
+                    "and F.max combiners. Pre-salt with "
+                    "giraph_spark.partitioning.salt_heavy_keys, or redesign "
+                    "the message to a bounded combinable form (see "
+                    "algos.components.core_numbers).",
+                    stacklevel=2,
+                )
             inbox = (
                 src_msgs.groupBy(F.col("_dst").alias(id_col))
                 .agg(agg)
@@ -641,10 +630,7 @@ def _pregel_impl(
         #    correctness-of-operation, not an optimization: every other
         #    frame (messages, inbox, next join) derives from this leaf, so
         #    per-superstep plan size stays constant (SURVEY §4.5/§7.3).
-        if checkpoint_dir and checkpoint_every and (superstep + 1) % checkpoint_every == 0:
-            state = state.checkpoint(eager=False)  # reliable, for resume at scale
-        else:
-            state = state.localCheckpoint(eager=False)
+        state = state.localCheckpoint(eager=False)
         new_vertices = state
 
         # 4. Send phase (triplet join: updated vertex ⨝ out-edges); only
@@ -711,7 +697,7 @@ def _pregel_impl(
                 with contextlib.redirect_stdout(buf):
                     new_messages.explain("formatted")
                 metrics.plans.append(buf.getvalue())
-            new_messages = _persist(new_messages)
+            new_messages = persist(new_messages)
             if skew_metrics:
                 srow = (
                     new_messages.groupBy("_dst")
@@ -726,36 +712,17 @@ def _pregel_impl(
                     "salted": salted_this,
                 }
                 # Observation -> response: a hot key this superstep arms
-                # (or, once de-skewed, disarms) the salted delivery for
+                # (or, once de-skewed, disarms) the salted delivery of
                 # the NEXT superstep's inbox of these same messages.
-                hot = skew_row["max_inbox_group"] > skew_factor * max(
+                hot = skew_row["max_inbox_group"] > SKEW_FACTOR * max(
                     skew_row["median_inbox_group"], 1.0
                 )
-                can_salt = combine_algebraic and (
-                    combine is not None or combine_fn is not None
-                )
-                salt_next = hot and can_salt
-                if hot and not can_salt and not skew_warned:
-                    skew_warned = True
-                    warnings.warn(
-                        "pregel: hot destination observed "
-                        f"(max_inbox_group={skew_row['max_inbox_group']} > "
-                        f"{skew_factor}x median="
-                        f"{skew_row['median_inbox_group']}); the combiner is "
-                        "not declared self-decomposable so the salted "
-                        "delivery cannot engage. Pass combine_algebraic=True "
-                        "(sum/min/max-style combiners), pre-salt with "
-                        "giraph_spark.partitioning.salt_heavy_keys, or "
-                        "redesign the message to a bounded combinable form "
-                        "(see algos.components.core_numbers).",
-                        stacklevel=2,
-                    )
+                hot_row = skew_row if hot else None
             else:
                 ctx.num_messages = new_messages.count()
         else:
             state.count()  # still must materialize before releasing prev
             ctx.num_messages = 0
-        ctx.num_vertices = -1  # constant per run; not worth an action
 
         # 5. Global aggregates → driver (partial-per-worker + merge is
         #    Spark's partial aggregation; ≡ WorkerAggregatorHandler).
@@ -776,9 +743,8 @@ def _pregel_impl(
         metrics.supersteps.append(
             {
                 "superstep": superstep,
-                "vertices": ctx.num_vertices,
                 "messages": ctx.num_messages,
-                "partitions": gear.cur,
+                "partitions": _gear.cur,
                 "seconds": time.monotonic() - t0,
                 **(skew_row or {}),
             }
@@ -827,7 +793,9 @@ def _pregel_impl(
         # 8. Termination: external halt signal (one FS existence probe per
         #    superstep ≡ the master's halt-znode watch), master halt, or
         #    all-halted ∧ no messages (BspServiceMaster.java:1681-1685).
-        if halt_path is not None and _consume_halt_file(spark, halt_path):
+        if state_checkpoint_dir and _consume_halt_file(
+            spark, f"{state_checkpoint_dir}/HALT"
+        ):
             ctx.halt()
         if ctx._halt:
             break
@@ -848,15 +816,15 @@ def _pregel_impl(
         #    is always allowed (guards against post-decline regrowth). The
         #    2× hysteresis bounds state re-keys to O(log nparts) per run;
         #    each re-key exchange folds into the next superstep's job.
-        if adaptive_partitions and new_messages is not None:
-            if gear.floor_rows is None:
-                gear.floor_rows = vertices.count()
-            width = gear.cur
+        if new_messages is not None:
+            if _gear.floor_rows is None:
+                _gear.floor_rows = vertices.count()
+            width = _gear.cur
             declining = prev_msg_count is not None and (
                 ctx.num_messages < prev_msg_count
             )
-            if gear.resize(ctx.num_messages, declining) != width:
-                vertices = vertices.repartition(gear.cur, F.col(id_col))
+            if _gear.resize(ctx.num_messages, declining) != width:
+                vertices = vertices.repartition(_gear.cur, F.col(id_col))
             prev_msg_count = ctx.num_messages
 
     return vertices.drop(MSG, HAS_MSG, HALTED, ACTIVE)

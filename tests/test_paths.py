@@ -59,8 +59,8 @@ def test_bfs_golden(sssp_toy):
 def test_adaptive_gear_down_on_frontier_collapse(spark, monkeypatch):
     """The kernel shrinks its shuffle width once the frontier declines
     (lollipop graph: dense head floods early supersteps, then a long tail
-    path sends one message per superstep), and the result is identical to
-    a fixed-width run. ROWS_PER_PARTITION is patched down so a small graph
+    path sends one message per superstep), and the result keeps the exact
+    BFS levels. ROWS_PER_PARTITION is patched down so a small graph
     exercises the gear logic (the kernel's gear is plans.gear.LoopGear)."""
     import giraph_spark.plans.gear as G
 
@@ -78,8 +78,10 @@ def test_adaptive_gear_down_on_frontier_collapse(spark, monkeypatch):
     out = bfs(g, source=0, metrics=metrics, num_partitions=8)
     got = {r["id"]: r["level"] for r in out.collect()}
     # head levels: source 0, rest of clique 1; tail path climbs from 9
-    assert got[0] == 0 and got[5] == 1
-    assert got[100] == 2 and got[115] == 17
+    # to 115; vertex 116 has no edge and stays unreached
+    want = {0: 0, **{i: 1 for i in range(1, 10)}, 116: -1}
+    want.update({100 + i: 2 + i for i in range(16)})
+    assert got == want
 
     gears = [s["partitions"] for s in metrics.supersteps]
     assert gears[0] == 8
@@ -87,9 +89,6 @@ def test_adaptive_gear_down_on_frontier_collapse(spark, monkeypatch):
     # monotone non-increasing after the decline sets in (no thrash)
     peak = gears.index(min(gears))
     assert all(a >= b for a, b in zip(gears[:peak], gears[1:peak]))
-
-    fixed = bfs(g, source=0, adaptive_partitions=False, num_partitions=8)
-    assert {r["id"]: r["level"] for r in fixed.collect()} == got
 
 
 def test_degrees(sssp_toy):

@@ -135,19 +135,22 @@ def test_sketch_ops_never_cartesian(spark, sf_dir):
 
 
 def test_auto_partition_sizing(spark, sf_dir):
-    """The kernel sizes its shuffle-partition count from the edge count:
-    a tiny graph collapses to one partition (pure scheduling-overhead
-    avoidance — measured 3x on sf0.1), while the session's
+    """The kernel sizes its shuffle-partition count from the edge count
+    with the loops' one width rule (``plans.gear.fit_width``): a tiny
+    graph collapses to one partition (pure scheduling-overhead avoidance
+    — measured 3x on sf0.1), while the session's
     spark.sql.shuffle.partitions remains the large-graph ceiling, and
     the session setting is restored after the run."""
-    from giraph_spark.pregel import ROWS_PER_PARTITION, _auto_partitions
+    from giraph_spark.plans.gear import ROWS_PER_PARTITION as rpp
+    from giraph_spark.plans.gear import fit_width
 
+    rows = (0, 1, rpp, rpp + 1, 3 * rpp, 100 * rpp)
+    assert [fit_width(n, 8) for n in rows] == [1, 1, 1, 2, 3, 8]
     g = trade_graph(spark, sf_dir)
     conf_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     n_edges = g.edges.count()
-    auto = _auto_partitions(g, conf_parts)
-    assert auto == max(1, min(conf_parts, -(-n_edges // ROWS_PER_PARTITION)))
     before = spark.conf.get("spark.sql.shuffle.partitions")
+    m = PregelMetrics()
     pregel(
         g,
         initial={"value": F.lit(0.0)},
@@ -156,7 +159,9 @@ def test_auto_partition_sizing(spark, sf_dir):
         combine=F.max,
         vote_to_halt=F.lit(True),
         max_supersteps=1,
+        metrics=m,
     )
+    assert m.supersteps[0]["partitions"] == fit_width(n_edges, conf_parts)
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
 
@@ -222,10 +227,11 @@ def test_funnel_and_dedup_corpus_plans_stay_relational(spark, sf_dir):
 
 def test_skew_response_salted_delivery(spark):
     """The closed skew loop (VERDICT r4 #3): a hot-key observation arms
-    the two-phase salted delivery on the NEXT superstep for a declared
-    self-decomposable combiner, and the results are bit-identical to the
-    unsalted run. Without the declaration, the same observation emits a
-    warning naming salt_heavy_keys instead."""
+    the two-phase salted delivery on the NEXT superstep when the
+    combiner is self-decomposable (F.sum here), and the results are
+    bit-identical to the unsalted run. Any other combiner — even an
+    opaque wrapper around F.sum — gets a warning naming salt_heavy_keys
+    instead."""
     import warnings as _w
 
     from giraph_spark import Graph, PregelMetrics
@@ -238,18 +244,15 @@ def test_skew_response_salted_delivery(spark):
     vertices = spark.createDataFrame([(i,) for i in range(201)], "id long")
     g = Graph(vertices, edges)
 
-    def run(algebraic):
+    def run(combine, skew_metrics=True):
         m = PregelMetrics()
         out = pregel(
             g,
             initial={"acc": F.lit(0.0)},
             update={"acc": F.col("acc") + F.coalesce(F.col("_msg"), F.lit(0.0))},
             send_msg=F.lit(1.0),
-            combine=F.sum,
-            combine_algebraic=algebraic,
-            skew_metrics=True,
-            skew_factor=4.0,
-            skew_salts=4,
+            combine=combine,
+            skew_metrics=skew_metrics,
             max_supersteps=3,
             metrics=m,
         )
@@ -257,25 +260,91 @@ def test_skew_response_salted_delivery(spark):
         return m, rows
 
     with _w.catch_warnings():
-        _w.simplefilter("error")  # algebraic path must NOT warn
-        m_salt, r_salt = run(True)
+        _w.simplefilter("error")  # the self-decomposable path must NOT warn
+        m_salt, r_salt = run(F.sum)
+        _, r_plain = run(F.sum, skew_metrics=False)
     # superstep 0 observes the hot hub (200 vs median 1); superstep 1+
     # deliveries run salted
-    assert m_salt.supersteps[0]["salted"] is False
-    assert m_salt.supersteps[1]["salted"] is True
-    assert m_salt.supersteps[2]["salted"] is True
+    assert [s["salted"] for s in m_salt.supersteps] == [False, True, True]
 
     with _w.catch_warnings(record=True) as caught:
         _w.simplefilter("always")
-        m_warn, r_warn = run(False)
+        m_warn, r_warn = run(lambda c: F.sum(c))
     assert not any(s.get("salted") for s in m_warn.supersteps)
     msgs = [str(c.message) for c in caught]
-    assert any("salt_heavy_keys" in s and "combine_algebraic" in s for s in msgs)
+    assert any("salt_heavy_keys" in s for s in msgs)
 
     # identical results: hub accumulated 200 per delivered superstep
-    assert r_salt == r_warn
+    assert r_salt == r_plain == r_warn
     assert r_salt[0] == 400.0  # 2 delivered supersteps x 200 messages
     assert r_salt[2] == 2.0    # chain neighbor: 1 per delivered superstep
+
+
+# the keywords trimmed from the kernel (no caller set them); each must now
+# be refused before the run touches the session
+_REMOVED_KEYWORDS = {
+    "checkpoint_dir": "ckpt",
+    "storage_level": None,
+    "halt_file": "HALT",
+    "start_superstep": 1,
+    "adaptive_partitions": False,
+    "skew_factor": 4.0,
+    "skew_salts": 4,
+    "combine_algebraic": True,
+}
+
+
+def test_pregel_keywords_are_documented():
+    """The kernel's public keywords — ``pregel``'s and ``_pregel_impl``'s,
+    private names aside — are exactly the names its Parameters section
+    documents, and none of the trimmed keywords is among them."""
+    import inspect
+    import re
+
+    from giraph_spark.pregel import _pregel_impl
+
+    names = {
+        p.name
+        for fn in (pregel, _pregel_impl)
+        for p in inspect.signature(fn).parameters.values()
+        if p.kind is not p.VAR_KEYWORD
+        and p.name != "graph"
+        and not p.name.startswith("_")
+    }
+    section = _pregel_impl.__doc__.split("----------\n")[1]
+    documented = {
+        name
+        for entry in re.findall(r"^    (\w[\w /]*):$", section, re.M)
+        for name in entry.split(" / ")
+    }
+    assert names == documented
+    assert len(names) == 17
+    assert not names & set(_REMOVED_KEYWORDS)
+
+
+@pytest.mark.parametrize("kw", sorted(_REMOVED_KEYWORDS))
+def test_removed_pregel_keyword_raises_and_leaves_session(spark, kw):
+    """Passing a trimmed keyword raises ``TypeError`` and leaves the
+    session conf and the cache as found."""
+    from giraph_spark import Graph
+
+    g = Graph(
+        spark.createDataFrame([(0,), (1,)], "id long"),
+        spark.createDataFrame([(0, 1)], "src long, dst long"),
+    )
+    conf = spark.conf
+    before = (
+        conf.get("spark.sql.shuffle.partitions"),
+        conf.get("spark.sql.adaptive.enabled"),
+    )
+    spark.catalog.clearCache()
+    with pytest.raises(TypeError, match=kw):
+        pregel(g, update={}, **{kw: _REMOVED_KEYWORDS[kw]})
+    assert (
+        conf.get("spark.sql.shuffle.partitions"),
+        conf.get("spark.sql.adaptive.enabled"),
+    ) == before
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_profile_columns_single_scan(spark, sf_dir):
@@ -624,10 +693,18 @@ _ISOLATION_CASES = [
     ("k_core", "weighted", {"k": 2}, None),
     ("s_core", "weighted", {"s": 2.0}, None),
     ("sssp", "weighted", {"source": 0}, None),
+    ("wcc", "weighted", {}, None),
+    ("core_numbers", "weighted", {}, None),
+    ("label_propagation_communities", "weighted", {}, None),
     ("max_weight_matching", "asymmetric", {}, ValueError),
     ("k_core", "path", {"k": 2, "max_rounds": 1}, RuntimeError),
     ("s_core", "path", {"s": 1.5, "max_rounds": 1}, RuntimeError),
     ("k_truss", "weighted", {"k": 4, "max_rounds": 1}, RuntimeError),
+    # a keyword trimmed from the kernel is refused after the caller has
+    # cached its edge relation: the caller's own registry releases it
+    ("wcc", "weighted", {"adaptive_partitions": False}, TypeError),
+    ("core_numbers", "weighted", {"checkpoint_dir": "ckpt"}, TypeError),
+    ("label_propagation_communities", "weighted", {"halt_file": "HALT"}, TypeError),
 ]
 
 

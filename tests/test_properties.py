@@ -6,7 +6,7 @@ capped to keep Spark-job count sane."""
 import hashlib
 import re
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from giraph_spark.functions.dedup import normalize_text, portable_hash60
@@ -19,7 +19,7 @@ TEXT = st.text(
     ),
     max_size=80,
 )
-SETTINGS = dict(max_examples=3, deadline=None)
+SETTINGS = dict(max_examples=3, deadline=None, print_blob=True)
 
 
 def _py_normalize(s: str) -> str:
@@ -474,13 +474,26 @@ def _py_robots_allowed(groups, agent: str, path: str) -> bool:
     """Pure-Python RFC 9309 model: the exact-agent group(s) govern iff
     any group names the agent, else the ``*`` group(s); among matching
     rules longest pattern wins, allow wins a length tie; no matching
-    rule means allowed."""
+    rule means allowed.
+
+    Groups follow the RFC 9309 §2.1 grammar, ``group = startgroupline
+    *(startgroupline / emptyline) *(rule / emptyline)``: the user-agent
+    lines of a rule-less group run on, across blank lines, into the next
+    group's, so its agents share that group's rules; a trailing
+    rule-less group has no rules at all."""
     import re as _re
 
-    def governs(agents):
-        return agent in agents
+    merged, pending = [], []
+    for agents, lines in groups:
+        pending = pending + list(agents)
+        if lines:
+            merged.append((pending, lines))
+            pending = []
+    if pending:
+        merged.append((pending, []))
+    groups = merged
 
-    has_exact = any(governs(a) for a, _ in groups)
+    has_exact = any(agent in a for a, _ in groups)
     rules = [
         (rule, pat)
         for agents, lines in groups
@@ -502,6 +515,12 @@ def _py_robots_allowed(groups, agent: str, path: str) -> bool:
 @given(
     st.lists(_RP_GROUP, min_size=1, max_size=3),
     st.lists(_RP_PATH, min_size=1, max_size=10),
+)
+@example(  # a rule-less mybot group merges into the next: /a disallowed
+    groups=[(["mybot"], []), (["*"], [("disallow", "/a")])], paths=["/a"]
+)
+@example(  # a trailing rule-less mybot group: no rules, /a allowed
+    groups=[(["*"], [("disallow", "/a")]), (["mybot"], [])], paths=["/a"]
 )
 @settings(**SETTINGS)
 def test_robots_verdict_matches_python_rfc_model(spark, groups, paths):
