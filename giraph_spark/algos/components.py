@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from ..graph import Graph
 from ..pregel import MSG, PregelMetrics, pregel
 from ..plans.checkpoint import fresh_checkpoint
-from ..plans.gear import LoopGear, fit_width
+from ..plans.gear import LoopGear
 
 
 def _label_propagation(
@@ -142,104 +142,79 @@ def alternating_star_components(
     sort/except join. Lineage is truncated per round (localCheckpoint),
     the same plan-growth discipline as the pregel loop.
     """
-    spark = graph.vertices.sparkSession
     id_col, src_col, dst_col = graph.id_col, graph.src_col, graph.dst_col
-
-    # same data-sized shuffle-partition discipline as the pregel kernel
-    # (restored on exit); every round's groupBys/joins agree on one count
-    parts_before = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(fit_width(graph.edges.count(), int(parts_before))),
-    )
-    try:
-        return _alternating_star_impl(
-            graph, spark, id_col, src_col, dst_col, max_rounds, component_col
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", parts_before)
-
-
-def _alternating_star_impl(
-    graph: Graph,
-    spark,
-    id_col: str,
-    src_col: str,
-    dst_col: str,
-    max_rounds: int,
-    component_col: str,
-) -> DataFrame:
-    e = (
-        graph.edges.select(
-            F.col(src_col).cast("long").alias("u"),
-            F.col(dst_col).cast("long").alias("v"),
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    adj = e.unionByName(
-        e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).distinct()
-
-    def signature(edges: DataFrame):
-        canon = edges.where(F.col("u") < F.col("v"))
-        row = canon.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.expr("bit_xor(xxhash64(u, v))"), F.lit(0)).alias("h"),
-        ).collect()[0]
-        return row["n"], row["h"]
-
-    prev_sig = None
-    prev_adj = None
-    converged = False
-    for _ in range(max_rounds):
-        # large-star: neighbors above the center re-attach to the center's min
-        mins = adj.groupBy("u").agg(
-            F.least(F.first("u"), F.min("v")).alias("m")
-        )
-        big = (
-            adj.join(mins, "u")
-            .where(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("a"), F.col("m").alias("b"))
-            .where(F.col("a") != F.col("b"))
+    # the gear's conf window: AQE off inside the checkpoint-truncated
+    # loop, and one data-sized width that every round's groupBys/joins
+    # agree on (both restored on exit)
+    with LoopGear(graph.vertices.sparkSession) as gear:
+        gear.resize(graph.edges.count())
+        e = (
+            graph.edges.select(
+                F.col(src_col).cast("long").alias("u"),
+                F.col(dst_col).cast("long").alias("v"),
+            )
+            .where(F.col("u") != F.col("v"))
             .distinct()
         )
-        adj_l = big.select(
-            F.col("a").alias("u"), F.col("b").alias("v")
-        ).unionByName(big.select(F.col("b").alias("u"), F.col("a").alias("v")))
+        adj = e.unionByName(
+            e.select(F.col("v").alias("u"), F.col("u").alias("v"))
+        ).distinct()
 
-        # small-star: the center and its below-neighbors re-attach to their min
-        smaller = adj_l.where(F.col("v") < F.col("u"))
-        mins2 = smaller.groupBy("u").agg(F.min("v").alias("m"))
-        small = (
-            smaller.join(mins2, "u")
-            .where(F.col("v") != F.col("m"))
-            .select(F.col("v").alias("a"), F.col("m").alias("b"))
-            .unionByName(
-                mins2.select(F.col("u").alias("a"), F.col("m").alias("b"))
+        def signature(edges: DataFrame):
+            canon = edges.where(F.col("u") < F.col("v"))
+            row = canon.agg(
+                F.count(F.lit(1)).alias("n"),
+                F.coalesce(F.expr("bit_xor(xxhash64(u, v))"), F.lit(0)).alias("h"),
+            ).collect()[0]
+            return row["n"], row["h"]
+
+        prev_sig = None
+        converged = False
+        for _ in range(max_rounds):
+            # large-star: neighbors above the center re-attach to its min
+            mins = adj.groupBy("u").agg(
+                F.least(F.first("u"), F.min("v")).alias("m")
             )
-            .distinct()
-        )
-        # small is distinct with a > b everywhere, so the swapped copies
-        # cannot collide with the originals — no further distinct needed
-        # fresh_checkpoint: each round joins adj with aggregates OF
-        # ITSELF (mins/mins2), the self-derivative shape whose inherited
-        # size estimate squares per round (plans/checkpoint.py)
-        new_adj = fresh_checkpoint(
-            small.select(F.col("a").alias("u"), F.col("b").alias("v"))
-            .unionByName(
-                small.select(F.col("b").alias("u"), F.col("a").alias("v"))
+            big = (
+                adj.join(mins, "u")
+                .where(F.col("v") > F.col("u"))
+                .select(F.col("v").alias("a"), F.col("m").alias("b"))
+                .where(F.col("a") != F.col("b"))
+                .distinct()
             )
-        )
-        sig = signature(new_adj)
-        if prev_adj is not None:
-            prev_adj.unpersist()
-        prev_adj = new_adj
-        adj = new_adj
-        if sig == prev_sig:
-            converged = True
-            break
-        prev_sig = sig
+            adj_l = big.select(
+                F.col("a").alias("u"), F.col("b").alias("v")
+            ).unionByName(big.select(F.col("b").alias("u"), F.col("a").alias("v")))
+
+            # small-star: the center and its below-neighbors re-attach to
+            # their min
+            smaller = adj_l.where(F.col("v") < F.col("u"))
+            mins2 = smaller.groupBy("u").agg(F.min("v").alias("m"))
+            small = (
+                smaller.join(mins2, "u")
+                .where(F.col("v") != F.col("m"))
+                .select(F.col("v").alias("a"), F.col("m").alias("b"))
+                .unionByName(
+                    mins2.select(F.col("u").alias("a"), F.col("m").alias("b"))
+                )
+                .distinct()
+            )
+            # small is distinct with a > b everywhere, so the swapped copies
+            # cannot collide with the originals — no further distinct needed
+            # fresh_checkpoint: each round joins adj with aggregates OF
+            # ITSELF (mins/mins2), the self-derivative shape whose inherited
+            # size estimate squares per round (plans/checkpoint.py)
+            adj = fresh_checkpoint(
+                small.select(F.col("a").alias("u"), F.col("b").alias("v"))
+                .unionByName(
+                    small.select(F.col("b").alias("u"), F.col("a").alias("v"))
+                )
+            )
+            sig = signature(adj)
+            if sig == prev_sig:
+                converged = True
+                break
+            prev_sig = sig
 
     if not converged:
         # the final min-neighbor extraction is only correct on a converged

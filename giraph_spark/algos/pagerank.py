@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import Graph
+from ..plans.gear import LoopGear
 from ..pregel import MSG, PregelContext, PregelMetrics, pregel
 
 
@@ -336,16 +337,16 @@ def eigenvector_centrality(
     yields all-zero scores rather than NaN. Hop semantics over the edges
     AS GIVEN — symmetrize first for the undirected form."""
     id_col, src_col, dst_col = graph.id_col, graph.src_col, graph.dst_col
-    # persist: each iteration runs one driver action, and without the
-    # persist the edge relation's full upstream lineage (e.g. the
-    # lineitem⋈orders join of trade_graph) re-executes every round
-    edges = graph.edges.select(
-        F.col(src_col).alias("_s"), F.col(dst_col).alias("_t")
-    ).persist()
     x = graph.vertices.select(
         F.col(id_col), F.lit(1.0).alias("_x")
     ).localCheckpoint(eager=False)
-    try:
+    with LoopGear(graph.vertices.sparkSession, window=False) as gear:
+        # persist: each iteration runs one driver action, and without the
+        # persist the edge relation's full upstream lineage (e.g. the
+        # lineitem⋈orders join of trade_graph) re-executes every round
+        edges = gear.persist(
+            graph.edges.select(F.col(src_col).alias("_s"), F.col(dst_col).alias("_t"))
+        )
         for _ in range(iterations):
             contrib = (
                 x.join(edges, x[id_col] == edges["_s"])
@@ -372,8 +373,6 @@ def eigenvector_centrality(
         return x.select(id_col, F.col("_x").alias("eigenvector")).localCheckpoint(
             eager=True
         )
-    finally:
-        edges.unpersist()
 
 
 def hits(
@@ -394,9 +393,6 @@ def hits(
     persisted for the run (two actions per round would otherwise re-run
     its upstream lineage every time) and released on any exit."""
     id_col, src_col, dst_col = graph.id_col, graph.src_col, graph.dst_col
-    edges = graph.edges.select(
-        F.col(src_col).alias("_s"), F.col(dst_col).alias("_t")
-    ).persist()
     state = graph.vertices.select(
         F.col(id_col), F.lit(1.0).alias("_h"), F.lit(1.0).alias("_a")
     ).localCheckpoint(eager=False)
@@ -410,7 +406,10 @@ def hits(
             v = F.round(v, round_digits)
         return df.withColumn(col, v)
 
-    try:
+    with LoopGear(graph.vertices.sparkSession, window=False) as gear:
+        edges = gear.persist(
+            graph.edges.select(F.col(src_col).alias("_s"), F.col(dst_col).alias("_t"))
+        )
         for _ in range(iterations):
             # authorities from hub mass along edges
             contrib = (
@@ -442,5 +441,3 @@ def hits(
         return state.select(
             id_col, F.col("_h").alias("hub"), F.col("_a").alias("authority")
         ).localCheckpoint(eager=True)
-    finally:
-        edges.unpersist()

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import Graph
+from ..plans.gear import LoopGear
 from ..pregel import MSG, PregelMetrics, pregel
 
 INF = float("inf")
@@ -324,33 +325,34 @@ def betweenness_centrality(
         )
 
     metrics = metrics if metrics is not None else PregelMetrics()
-    fwd = pregel(
-        graph,
-        initial={"_d": init_d, "_sg": init_sg},
-        update=fwd_update,
-        send_msg=fwd_send,
-        combine=vector_sum,
-        msg_type="array<double>",
-        vote_to_halt=F.lit(True),
-        max_supersteps=max_supersteps,
-        metrics=metrics,
-        **pregel_kwargs,
-    ).persist()
-    # a truncated forward BFS would silently underestimate every score
-    # (vertices beyond the cutoff keep d=∞ and their dependency credit
-    # vanishes) — fail loudly instead, like k_truss on an un-peeled exit
-    if (
-        metrics.num_supersteps >= max_supersteps
-        and metrics.supersteps
-        and metrics.supersteps[-1]["messages"] > 0
-    ):
-        fwd.unpersist()
-        raise RuntimeError(
-            "betweenness_centrality: forward BFS still had an active "
-            f"frontier at max_supersteps={max_supersteps}; raise it above "
-            "the graph's pivot eccentricity"
+    with LoopGear(graph.vertices.sparkSession, window=False) as gear:
+        fwd = gear.persist(
+            pregel(
+                graph,
+                initial={"_d": init_d, "_sg": init_sg},
+                update=fwd_update,
+                send_msg=fwd_send,
+                combine=vector_sum,
+                msg_type="array<double>",
+                vote_to_halt=F.lit(True),
+                max_supersteps=max_supersteps,
+                metrics=metrics,
+                **pregel_kwargs,
+            )
         )
-    try:
+        # a truncated forward BFS would silently underestimate every score
+        # (vertices beyond the cutoff keep d=∞ and their dependency credit
+        # vanishes) — fail loudly instead, like k_truss on an un-peeled exit
+        if (
+            metrics.num_supersteps >= max_supersteps
+            and metrics.supersteps
+            and metrics.supersteps[-1]["messages"] > 0
+        ):
+            raise RuntimeError(
+                "betweenness_centrality: forward BFS still had an active "
+                f"frontier at max_supersteps={max_supersteps}; raise it above "
+                "the graph's pivot eccentricity"
+            )
         lmax = fwd.select(
             F.max(
                 F.array_max(
@@ -425,8 +427,6 @@ def betweenness_centrality(
             "0.0d, (acc, x) -> acc + x)"
         )
         return out.select(id_col, F.round(betw, 6).alias("betweenness"))
-    finally:
-        fwd.unpersist()
 
 
 def sssp_with_paths(

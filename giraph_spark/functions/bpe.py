@@ -36,6 +36,10 @@ from .hashing import normalize_text
 #: crossing word boundaries and lets decoding recover spacing
 EOW = "▁"
 
+#: largest vocabulary (distinct words) whose merge loop runs on the
+#: driver; above it :func:`train_bpe` runs the distributed loop
+DRIVER_VOCAB_LIMIT = 500_000
+
 
 def _word_freq(df: DataFrame, text_col: str) -> DataFrame:
     """The one corpus scan: normalized whitespace words → (word, freq).
@@ -117,7 +121,6 @@ def train_bpe(
     num_merges: int = 200,
     text_col: str = "text",
     min_pair_count: int = 2,
-    driver_vocab_limit: int | None = 500_000,
 ) -> list[tuple[str, str]]:
     """Learn ``num_merges`` BPE merges from the corpus. Returns the
     ordered merge list ``[(a, b), ...]`` — the tokenizer artifact
@@ -132,7 +135,7 @@ def train_bpe(
     and COUNTED in the same job, so nothing is collected before the
     vocabulary size is known and the over-limit fallback reuses the
     materialized relation instead of re-scanning the corpus. When the
-    vocabulary has at most ``driver_vocab_limit`` rows, the merge loop
+    vocabulary has at most :data:`DRIVER_VOCAB_LIMIT` rows, the merge loop
     runs DRIVER-SIDE on the collected table (Sennrich's own
     formulation: the sequential argmax core is driver state either
     way, and the per-round pair statistics are vocabulary-sized, not
@@ -141,22 +144,15 @@ def train_bpe(
     (only words containing the merged pair are recounted; a lazy
     max-heap holds the candidate pairs), bit-identical to the
     distributed loop including overlap counting and the lexicographic
-    tie-break (``tests/test_bpe.py`` asserts the parity on both
-    fallback triggers). A vocabulary above the limit (or
-    ``driver_vocab_limit=None``) runs the distributed per-merge loop,
-    which never collects more than one row per round — the limit
-    bounds the driver's working set (vocab rows plus the pair-count /
-    occurrence indexes, roughly a few hundred bytes per word)."""
-    wf = _word_freq(df, text_col)
-    if driver_vocab_limit is not None:
-        wf, n_vocab, _ = fresh_checkpoint_count(wf)
-        if n_vocab <= driver_vocab_limit:
-            vocab = [(r["word"], r["freq"]) for r in wf.collect()]
-            wf.unpersist()
-            return _train_bpe_driver(vocab, num_merges, min_pair_count)
-        merges = _train_bpe_distributed(wf, num_merges, min_pair_count)
-        wf.unpersist()
-        return merges
+    tie-break (``tests/test_bpe.py`` asserts the parity). A vocabulary
+    above the limit runs the distributed per-merge loop, which never
+    collects more than one row per round — the limit bounds the
+    driver's working set (vocab rows plus the pair-count / occurrence
+    indexes, roughly a few hundred bytes per word)."""
+    wf, n_vocab, _ = fresh_checkpoint_count(_word_freq(df, text_col))
+    if n_vocab <= DRIVER_VOCAB_LIMIT:
+        vocab = [(r["word"], r["freq"]) for r in wf.collect()]
+        return _train_bpe_driver(vocab, num_merges, min_pair_count)
     return _train_bpe_distributed(wf, num_merges, min_pair_count)
 
 
@@ -233,8 +229,7 @@ def _train_bpe_distributed(
     """The per-merge distributed loop — the over-limit fallback: each
     round is one pair-count argmax (a 1-row collect) and one
     aggregate-fold merge projection over the |V|-row symbol relation.
-    Takes the word-frequency relation (not the corpus), so the caller
-    decides whether it is already materialized."""
+    Takes the materialized word-frequency relation, not the corpus."""
     import gc
 
     sym = fresh_checkpoint(_symbolize(word_freq))
@@ -250,12 +245,12 @@ def _train_bpe_distributed(
             break
         a, b = best[0]["a"], best[0]["b"]
         merges.append((a, b))
-        prev, sym = sym, fresh_checkpoint(_apply_merge(sym, a, b))
-        # the pregel loop-hygiene pattern: drop the superseded round's
-        # state so ContextCleaner frees its localCheckpoint blocks
-        # instead of accumulating num_merges copies of the |V|-row
-        # relation in the block manager
-        prev.unpersist()
+        sym = fresh_checkpoint(_apply_merge(sym, a, b))
+        # the superseded round's state is unreferenced now; the periodic
+        # collect drops its py4j handle so ContextCleaner frees its
+        # localCheckpoint blocks instead of accumulating num_merges
+        # copies of the |V|-row relation in the block manager
+        # (unpersist() on a checkpointed frame frees nothing)
         if (rnd + 1) % 20 == 0:
             gc.collect()
     return merges

@@ -407,7 +407,7 @@ def pairs_to_clusters(
     from ..algos.components import connected_components
     from ..graph import Graph
     from ..plans.checkpoint import fresh_checkpoint_count
-    from ..plans.gear import fit_width
+    from ..plans.gear import LoopGear, fit_width
 
     # materialize the (tiny) pair relation once: the derivations below
     # would otherwise re-run the generator's banded self-join + compare
@@ -415,23 +415,19 @@ def pairs_to_clusters(
     # near_dup_clusters call at sf0.1
     pairs, n_pairs, _ = fresh_checkpoint_count(pairs)
     edges = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-    sym = edges.unionByName(
-        pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
-    ).dropDuplicates(["src", "dst"])
-    sym.persist()  # the kernel's edge cache + members read it once each
-    nparts = fit_width(
-        2 * n_pairs,
-        int(pairs.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")),
-    )
-    try:
+    with LoopGear(pairs.sparkSession, window=False) as gear:
+        # the kernel's edge cache + members read it once each
+        sym = gear.persist(
+            edges.unionByName(
+                pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
+            ).dropDuplicates(["src", "dst"])
+        )
         members = sym.select(F.col("src").alias("id")).distinct()
         comp = connected_components(
             Graph(members, sym),
             max_supersteps=max_supersteps,
-            num_partitions=nparts,
+            num_partitions=fit_width(2 * n_pairs, gear.ceiling),
         )
-    finally:
-        sym.unpersist()
     return comp.select(
         F.col("id").alias(id_col),
         F.col("component").alias("cluster"),

@@ -89,12 +89,6 @@ def _stdlib_content_decoder(modality: str):
     return None
 
 
-def _default_content_decoder(modality: str):
-    if modality in _CONTENT_DECODERS:
-        return _CONTENT_DECODERS[modality]
-    return _stdlib_content_decoder(modality)
-
-
 def decode_metadata(
     df: DataFrame,
     modality_col: str = "modality",

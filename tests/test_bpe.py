@@ -118,19 +118,20 @@ def test_train_bpe_partitioning_invariant(spark):
     assert a == b
 
 
-def test_train_bpe_driver_distributed_parity(spark):
+def test_train_bpe_driver_distributed_parity(spark, monkeypatch):
     """The driver-side merge loop and the distributed fallback are the
-    same function — exercised on BOTH fallback triggers:
-    ``driver_vocab_limit=None`` (explicit opt-out) and a limit smaller
-    than the vocabulary (the over-limit probe path, which must reuse
-    the already-materialized word-frequency relation)."""
+    same function — the fallback exercised by a limit smaller than the
+    vocabulary (the over-limit probe path, which must reuse the
+    already-materialized word-frequency relation)."""
+    from giraph_spark.functions import bpe
+
     docs = spark.createDataFrame(
         [(i, t) for i, t in enumerate(CORPUS)], "doc_id long, text string"
     )
     driver = train_bpe(docs, num_merges=10)  # vocab far below any limit
-    explicit = train_bpe(docs, num_merges=10, driver_vocab_limit=None)
-    over_limit = train_bpe(docs, num_merges=10, driver_vocab_limit=1)
-    assert driver == explicit == over_limit
+    monkeypatch.setattr(bpe, "DRIVER_VOCAB_LIMIT", 1)
+    over_limit = train_bpe(docs, num_merges=10)
+    assert driver == over_limit
     assert len(driver) > 3
 
 

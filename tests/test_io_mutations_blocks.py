@@ -14,6 +14,7 @@ from giraph_spark.blocks import (
     RepeatUntilBlock,
     SequenceBlock,
     for_all_vertices,
+    master_compute,
     piece_count,
     reduce_and_broadcast,
 )
@@ -169,6 +170,21 @@ def test_blocks(spark):
     assert {r.value for r in out4.collect()} == {1.0}
 
     assert piece_count(RepeatBlock(3, inc)) == 3
+
+    # master_compute: a driver-only step between vertex pieces — it
+    # reads the reduced value and halts the run; the vertices pass through
+    def stop_at_one(c):
+        if c.values["mx"] >= 1:
+            c.halt()
+
+    blk5 = SequenceBlock(
+        inc,
+        reduce_and_broadcast("mx", F.max("value")),
+        master_compute(stop_at_one),
+        inc,
+    )
+    out5 = blk5.run(g)
+    assert {r.value for r in out5.collect()} == {1.0}
 
 
 def test_striped_block_partitions_work(spark):

@@ -99,9 +99,6 @@ def test_msf_bucketed_canonical_input_zero_input_exchange(spark, sf_dir):
     reads the bucketing from both scans (plan-asserted, mirroring the
     kernel's bucketed-layout test) — while assume_canonical=True
     produces the exact forest of the from-scratch path."""
-    import contextlib
-    import io
-
     from pyspark.sql import functions as F
 
     from giraph_spark.algos.mst import (
@@ -110,6 +107,7 @@ def test_msf_bucketed_canonical_input_zero_input_exchange(spark, sf_dir):
         save_msf_input,
     )
     from giraph_spark.plans.fixtures import trade_graph
+    from tests.plan_text import formatted_plan
 
     g = trade_graph(spark, sf_dir, directed=True)
     save_msf_input(g, "msf_bucket_test", buckets=4)
@@ -129,10 +127,7 @@ def test_msf_bucketed_canonical_input_zero_input_exchange(spark, sf_dir):
             F.col("id").cast("long").alias("u"),
             F.col("id").cast("long").alias("cu"),
         )
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            live.hint("shuffle_hash").join(lu, "u").explain("formatted")
-        plan = buf.getvalue()
+        plan = formatted_plan(live.hint("shuffle_hash").join(lu, "u"))
         assert plan.count("Bucketed: true") == 2
         assert "Exchange" not in plan
 

@@ -71,13 +71,11 @@ def test_bucketed_graph_join_skips_exchange(spark, sf_dir, tmp_path):
     """A graph saved bucketed joins vertices-to-edges on the bucket key
     with NO exchange on either scan side — co-location from storage (the
     at-scale layout replacing the kernel's per-run repartition)."""
-    import contextlib
-    import io
-
     from pyspark.sql import functions as F
 
     from giraph_spark.plans.fixtures import trade_graph
     from giraph_spark.sources import load_graph_bucketed, save_graph_bucketed
+    from tests.plan_text import formatted_plan
 
     g = trade_graph(spark, sf_dir, directed=True)
     save_graph_bucketed(g, "tg_bucket_test", buckets=8)
@@ -86,10 +84,7 @@ def test_bucketed_graph_join_skips_exchange(spark, sf_dir, tmp_path):
         joined = loaded.vertices.hint("shuffle_hash").join(
             loaded.edges, loaded.vertices["id"] == loaded.edges["src"]
         )
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            joined.explain("formatted")
-        plan = buf.getvalue()
+        plan = formatted_plan(joined)
         assert "Bucketed: true" in plan
         assert "Exchange" not in plan
         # round-trip fidelity

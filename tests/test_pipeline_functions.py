@@ -326,6 +326,30 @@ def test_sparse_aggregators(spark):
     assert ms == {0: {0: 1.0, 1: 2.0}, 3: {0: 5.0}}
 
 
+def test_pair_reduce_and_matrix_sum(spark):
+    """``PairReduce`` reduces each component independently; the dense
+    matrix sum (``MatrixSumAggregator`` family) adds row-major arrays
+    element-wise, a NULL matrix ignored."""
+    from giraph_spark.aggregators import matrix_sum, pair_reduce
+
+    df = spark.createDataFrame(
+        [
+            (1, 2.0, [[1.0, 2.0], [3.0, 4.0]]),
+            (5, 7.0, [[10.0, 20.0], [30.0, 40.0]]),
+            (3, 1.0, None),
+        ],
+        "a long, b double, m array<array<double>>",
+    )
+    row = df.agg(
+        pair_reduce(F.col("a"), F.col("b")).alias("s"),
+        pair_reduce(F.col("a"), F.col("b"), F.max, F.min).alias("mm"),
+        matrix_sum(F.col("m")).alias("ms"),
+    ).collect()[0]
+    assert (row["s"]["first"], row["s"]["second"]) == (9, 10.0)
+    assert (row["mm"]["first"], row["mm"]["second"]) == (5, 1.0)
+    assert row["ms"] == [[11.0, 22.0], [33.0, 44.0]]
+
+
 def test_quality_filter_null_text_fails_gate(spark):
     """A NULL-text document must FAIL the hard quality gate (three-valued
     logic would otherwise give it n_fail=0/passed=true), matching the

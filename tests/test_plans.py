@@ -4,21 +4,12 @@ per-superstep joins are co-partitioned shuffle-hash (the edge relation is
 never re-broadcast per superstep — wrong at any scale where edges exceed
 one executor)."""
 
-import contextlib
-import io
-
 import pytest
 from pyspark.sql import functions as F
 
 from giraph_spark.plans.fixtures import trade_graph
 from giraph_spark.pregel import PregelMetrics, pregel
-
-
-def _formatted_plan(df) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
+from tests.plan_text import formatted_plan as _formatted_plan
 
 
 def test_scan_pushdown_and_pruning(spark, sf_dir):
@@ -705,7 +696,22 @@ _ISOLATION_CASES = [
     ("wcc", "weighted", {"adaptive_partitions": False}, TypeError),
     ("core_numbers", "weighted", {"checkpoint_dir": "ckpt"}, TypeError),
     ("label_propagation_communities", "weighted", {"halt_file": "HALT"}, TypeError),
+    # callers that cache through the gear's registry without its window
+    ("eigenvector_centrality", "weighted", {"iterations": 2}, None),
+    ("hits", "directed", {"iterations": 2}, None),
+    ("betweenness_centrality", "weighted", {"pivots": [0]}, None),
+    ("betweenness_centrality", "path", {"pivots": [0], "max_supersteps": 1}, RuntimeError),
+    ("alternating_star_components", "weighted", {}, None),
+    ("alternating_star_components", "path", {"max_rounds": 1}, RuntimeError),
 ]
+
+
+def _width_and_aqe(spark):
+    conf = spark.conf
+    return (
+        conf.get("spark.sql.shuffle.partitions"),
+        conf.get("spark.sql.adaptive.enabled"),
+    )
 
 
 def _algo(name):
@@ -726,11 +732,7 @@ def test_round_loop_leaves_session_as_found(spark, fn, graph, kwargs, raises):
     shuffle width and AQE setting are restored and no DataFrame stays
     cached."""
     g = _iso_graphs(spark)[graph]
-    conf = spark.conf
-    before = (
-        conf.get("spark.sql.shuffle.partitions"),
-        conf.get("spark.sql.adaptive.enabled"),
-    )
+    before = _width_and_aqe(spark)
     spark.catalog.clearCache()
     call = _algo(fn)
     if raises is None:
@@ -738,14 +740,31 @@ def test_round_loop_leaves_session_as_found(spark, fn, graph, kwargs, raises):
     else:
         with pytest.raises(raises):
             call(g, **kwargs)
-    after = (
-        conf.get("spark.sql.shuffle.partitions"),
-        conf.get("spark.sql.adaptive.enabled"),
-    )
-    assert after == before
+    assert _width_and_aqe(spark) == before
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     if raises is None:
         assert out.count() >= 0  # the lazy result still evaluates
+
+
+def test_pairs_to_clusters_leaves_session_as_found(spark):
+    """``pairs_to_clusters`` caches its symmetric pair graph through the
+    gear: the session's width and AQE setting survive the call, nothing
+    stays cached, and the lazy result still evaluates."""
+    from giraph_spark.functions.dedup import pairs_to_clusters
+
+    before = _width_and_aqe(spark)
+    spark.catalog.clearCache()
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (7, 5), (9, 9)], "id_a long, id_b long"
+    )
+    out = pairs_to_clusters(pairs)
+    assert _width_and_aqe(spark) == before
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    got = {r["doc_id"]: (r["cluster"], r["is_keeper"]) for r in out.collect()}
+    assert got == {
+        1: (1, True), 2: (1, False), 3: (1, False),
+        5: (5, True), 7: (5, False), 9: (9, True),
+    }
 
 
 @pytest.mark.parametrize("fn", _ROUNDLOOPS)
@@ -769,9 +788,6 @@ def test_bcast_if_small_plan_shapes(spark):
     stats side is checkpoint-fresh (no size estimate), so ONLY the
     explicit hint can produce the broadcast — this pins the gate as
     load-bearing."""
-    import contextlib
-    import io
-
     from pyspark.sql import functions as F
 
     from giraph_spark.plans.checkpoint import fresh_checkpoint
@@ -782,18 +798,12 @@ def test_bcast_if_small_plan_shapes(spark):
     )
     delta = fresh_checkpoint(spark.range(10).select(F.col("id").alias("src")))
 
-    def plan_of(j):
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            j.explain("formatted")
-        return buf.getvalue()
-
     gated = big.join(bcast_if_small(delta, 10), on="src", how="left_anti")
-    assert "BroadcastHashJoin" in plan_of(gated)
+    assert "BroadcastHashJoin" in _formatted_plan(gated)
     ungated = big.join(
         bcast_if_small(delta, 10, limit_bytes=5), on="src", how="left_anti"
     )
-    p = plan_of(ungated)
+    p = _formatted_plan(ungated)
     assert "BroadcastHashJoin" not in p
     assert "SortMergeJoin" in p or "ShuffledHashJoin" in p
 

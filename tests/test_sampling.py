@@ -2,9 +2,6 @@
 exactness of stratified quotas, decontamination containment, mixture
 expectation — plus plan-shape checks (the zero-shuffle claims)."""
 
-import contextlib
-import io
-
 from pyspark.sql import functions as F
 
 from giraph_spark.functions.sampling import (
@@ -14,17 +11,11 @@ from giraph_spark.functions.sampling import (
     train_val_split,
     word_ngrams,
 )
+from tests.plan_text import formatted_plan as _plan
 
 
 def _docs(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def _plan(df) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
 
 
 def test_split_deterministic_and_disjoint(spark, sf_dir):

@@ -3,19 +3,10 @@ cases + the plan shapes that make them scale."""
 
 import pytest
 
-import contextlib
-import io
-
 from pyspark.sql import functions as F
 
 from giraph_spark.functions.joins import as_of_join, range_join_count
-
-
-def _plan(df) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
+from tests.plan_text import formatted_plan as _plan
 
 
 def _fixtures(spark):
