@@ -4,16 +4,24 @@ All are expression-only (no Python UDFs): shingling via ``sequence`` +
 ``transform`` + ``substring``, hashing via ``xxhash64``/``md5``. Scale
 notes per operator are in each docstring; the common theme is that the
 only shuffles are the groupBys on hash keys, and candidate generation
-never goes quadratic — banding (LSH) or prefix grouping bounds the
-pair space.
+never goes quadratic — banding (LSH, ``functions/lsh.py``) or prefix
+grouping bounds the pair space.
+
+A sketch the lazy result reads more than once (shingles, signatures,
+fingerprints) is taken with ``localCheckpoint(eager=False)``, not
+``persist()``: the first job that reads it computes it once, and its
+blocks go with the returned frame (the ContextCleaner frees them once
+that frame is garbage-collected), so a call leaves no cache-manager
+entry behind.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .hashing import normalize_text, portable_hash60
+from .lsh import band_pairs, bit_bands, est_jaccard, explode_bands, minhash_bands
 
 __all__ = [
     "portable_hash60",
@@ -89,7 +97,7 @@ def ngram_jaccard_pairs(
     value is exact within the stop-shingle-reduced shingle space (numerator
     and denominator agree — an unfiltered denominator would bias scores low
     for documents containing hot shingles)."""
-    sh = shingle_df(df, text_col, id_col, k).persist()
+    sh = shingle_df(df, text_col, id_col, k).localCheckpoint(eager=False)
     # stop-shingle removal: bounded fan-out
     freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df_"))
     sh_f = sh.join(freq.where(F.col("df_") <= max_df), on="shingle", how="left_semi")
@@ -138,7 +146,13 @@ def minhash_signatures(
     exploded relation (map-side partial aggregation keeps the shuffle
     small: num_hashes longs per doc). ``portable=True`` swaps xxhash64
     for :func:`portable_hash60` so a SQL oracle can replicate the exact
-    signatures."""
+    signatures.
+
+    Contract: ``id_col`` names one document per row, and each input
+    row signs independently. Two default-mode rows that share an id
+    yield two signature rows, each that of its own text; the portable
+    form's ``groupBy`` would instead union their shingle sets into one.
+    Deduplicate ids upstream where they may repeat."""
     if not portable:
         # xxhash64 mode (the production default): a document's
         # signature depends only on its own shingle set, so the
@@ -150,11 +164,6 @@ def minhash_signatures(
         # then hashInt of the int literal), each distinct shingle per
         # batch hashed once, vectorized by length group; the per-seed
         # family is one ``xxh64_int32`` vector op per seed.
-        # Precondition (same contract as the portable explode form's
-        # groupBy, stated because the row-local pass cannot merge):
-        # ``id_col`` identifies one document per row — duplicate-id
-        # rows would have had their shingle sets unioned by the old
-        # groupBy and now sign independently.
         return _minhash_signatures_arrow(df, text_col, id_col, k, num_hashes)
     sh = shingle_df(df, text_col, id_col, k)
     hfn = lambda seed: portable_hash60(F.col("shingle"), seed)  # noqa: E731
@@ -263,54 +272,11 @@ def minhash_lsh_pairs(
     correctness oracle at sample scale). ``portable=True`` uses
     md5-derived shingle hashes and the raw concatenated band string as the
     bucket key, so a SQL oracle replays the identical candidate set."""
-    rows = num_hashes // bands
     sig = minhash_signatures(
         df, text_col, id_col, k, num_hashes, portable=portable
-    ).persist()
-
-    def band_bucket(b: int) -> Column:
-        joined = F.concat_ws(
-            ",",
-            *[F.col("sig").getItem(b * rows + r).cast("string") for r in range(rows)],
-        )
-        # portable mode groups on the raw string (slightly wider shuffle
-        # key, engine-neutral); default hashes it down to one long
-        return joined if portable else F.xxhash64(joined).cast("string")
-
-    banded = sig.select(
-        F.col(id_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"), band_bucket(b).alias("bucket")
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select(id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-
-    # max_bucket caps pathological buckets (all-identical shingle sets)
-    bucket_sizes = banded.groupBy("band", "bucket").agg(
-        F.count(F.lit(1)).alias("bs")
-    )
-    banded = banded.join(
-        bucket_sizes.where(F.col("bs") <= max_bucket), on=["band", "bucket"], how="left_semi"
-    )
-    a = banded.alias("a")
-    b = banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-        .dropDuplicates()
+    ).localCheckpoint(eager=False)
+    cand = band_pairs(
+        minhash_bands(sig, id_col, num_hashes, bands, portable, max_bucket), id_col
     )
     sa = sig.select(F.col(id_col).alias("id_a"), F.col("sig").alias("sig_a"))
     sb = sig.select(F.col(id_col).alias("id_b"), F.col("sig").alias("sig_b"))
@@ -320,16 +286,7 @@ def minhash_lsh_pairs(
         .select(
             "id_a",
             "id_b",
-            F.round(
-                F.size(
-                    F.filter(
-                        F.zip_with("sig_a", "sig_b", lambda x, y: x == y),
-                        lambda m: m,
-                    )
-                )
-                / F.lit(float(len(range(num_hashes)))),
-                6,
-            ).alias("est_jaccard"),
+            est_jaccard("sig_a", "sig_b", num_hashes).alias("est_jaccard"),
         )
     )
     if verify_threshold is not None:
@@ -600,46 +557,11 @@ def simhash_near_pairs(
     fingerprints md5-derived and SQL-oracle-replicable."""
     if portable and bits > 60:
         bits = 60
-    chunk_bits = bits // 4
-    chunk_mask = (1 << chunk_bits) - 1
-    s = simhash(df, text_col, id_col, k, bits=bits, portable=portable).persist()
-    chunks = s.select(
-        F.col(id_col),
-        F.col("simhash"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("chunk"),
-                        F.shiftrightunsigned(F.col("simhash"), c * chunk_bits)
-                        .bitwiseAND(F.lit(chunk_mask))
-                        .alias("ck"),
-                    )
-                    for c in range(4)
-                ]
-            )
-        ).alias("cc"),
-    ).select(
-        id_col, "simhash", F.col("cc.chunk").alias("chunk"), F.col("cc.ck").alias("ck")
-    )
-    a = chunks.alias("a")
-    b = chunks.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.ck") == F.col("b.ck"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col("a.simhash").alias("sh_a"),
-            F.col("b.simhash").alias("sh_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    ham = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
+    s = simhash(df, text_col, id_col, k, bits=bits, portable=portable)
+    s = s.localCheckpoint(eager=False)
+    chunks = explode_bands(s, [id_col, "simhash"], bit_bands("simhash", 4, bits // 4))
+    cand = band_pairs(chunks, id_col, carry=("simhash",))
+    ham = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
     return cand.select(
         "id_a", "id_b", ham.cast("long").alias("hamming")
     ).where(F.col("hamming") <= max_hamming)
@@ -676,44 +598,18 @@ def fuzzy_decontaminate(
     comparable by construction). ``portable=True`` = md5 hashing +
     raw band strings for exact SQL-oracle replay, as with
     :func:`minhash_lsh_pairs`."""
-    rows = num_hashes // bands
     sig_c = minhash_signatures(
         df, text_col, id_col, k, num_hashes, portable=portable
-    ).persist()
+    ).localCheckpoint(eager=False)
     sig_b = minhash_signatures(
         benchmark, text_col, bench_id_col, k, num_hashes, portable=portable
-    ).persist()
-
-    def band_bucket(b: int) -> Column:
-        joined = F.concat_ws(
-            ",",
-            *[F.col("sig").getItem(b * rows + r).cast("string") for r in range(rows)],
-        )
-        return joined if portable else F.xxhash64(joined).cast("string")
-
-    def banded(sig: DataFrame, out_id: str) -> DataFrame:
-        bb = sig.select(
-            F.col(out_id),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band"), band_bucket(b).alias("bucket")
-                        )
-                        for b in range(bands)
-                    ]
-                )
-            ).alias("bb"),
-        ).select(out_id, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-        sizes = bb.groupBy("band", "bucket").agg(F.count(F.lit(1)).alias("bs"))
-        return bb.join(
-            sizes.where(F.col("bs") <= max_bucket),
-            on=["band", "bucket"],
-            how="left_semi",
-        )
+    ).localCheckpoint(eager=False)
     cand = (
-        banded(sig_c, id_col)
-        .join(banded(sig_b, bench_id_col), ["band", "bucket"])
+        minhash_bands(sig_c, id_col, num_hashes, bands, portable, max_bucket)
+        .join(
+            minhash_bands(sig_b, bench_id_col, num_hashes, bands, portable, max_bucket),
+            ["band", "bucket"],
+        )
         .select(id_col, bench_id_col)
         .dropDuplicates()
     )
@@ -726,16 +622,7 @@ def fuzzy_decontaminate(
         .select(
             id_col,
             bench_id_col,
-            F.round(
-                F.size(
-                    F.filter(
-                        F.zip_with("sig_a", "sig_b", lambda x, y: x == y),
-                        lambda m: m,
-                    )
-                )
-                / F.lit(float(num_hashes)),
-                6,
-            ).alias("est_jaccard"),
+            est_jaccard("sig_a", "sig_b", num_hashes).alias("est_jaccard"),
         )
     )
     return est.where(F.col("est_jaccard") >= threshold)

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .lsh import band_pairs, explode_bands
+
 #: output schema of :func:`image_dhash` — bands ride along so the
 #: near-dup join never has to shift a SIGNED long (band extraction
 #: happens in Python on the unsigned value, sign-safety by design)
@@ -205,34 +207,15 @@ def banded_hamming_pairs(
         raise ValueError(
             f"banded_hamming_pairs: max_hamming in [0, 64], got {max_hamming}"
         )
-    keys = list(key_cols)
-    h = hashes.where(F.col("error").isNull()).select(
-        F.col(id_col).alias("_id"),
-        *keys,
-        F.col(hash_col).alias("dhash"),
-        "b0", "b1", "b2", "b3",
+    h = hashes.where(F.col("error").isNull())
+    buckets = [F.col(f"b{i}") for i in range(4)]
+    cand = band_pairs(
+        explode_bands(h, [id_col, *key_cols, hash_col], buckets),
+        id_col,
+        key_cols,
+        (hash_col,),
     )
-    pairs = None
-    for band in ("b0", "b1", "b2", "b3"):
-        a = h.select(
-            F.col("_id").alias("id_a"),
-            *keys,
-            F.col("dhash").alias("_ha"),
-            F.col(band).alias("_k"),
-        )
-        b = h.select(
-            F.col("_id").alias("id_b"),
-            *keys,
-            F.col("dhash").alias("_hb"),
-            F.col(band).alias("_k"),
-        )
-        cand = a.join(b, [*keys, "_k"]).where(F.col("id_a") < F.col("id_b"))
-        pairs = cand if pairs is None else pairs.unionByName(cand)
-    dist = F.bit_count(F.col("_ha").bitwiseXOR(F.col("_hb")))
-    return (
-        pairs.select(
-            "id_a", "id_b", *keys, dist.cast("int").alias("hamming")
-        )
-        .where(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
+    dist = F.bit_count(F.col(f"{hash_col}_a").bitwiseXOR(F.col(f"{hash_col}_b")))
+    return cand.select(
+        "id_a", "id_b", *key_cols, dist.cast("int").alias("hamming")
+    ).where(F.col("hamming") <= max_hamming)

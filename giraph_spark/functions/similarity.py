@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .lsh import band_pairs, bit_bands, explode_bands
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -28,6 +30,15 @@ def _norm(a: Column) -> Column:
 
 def cosine(a: Column, b: Column) -> Column:
     return F.try_divide(_dot(a, b), _norm(a) * _norm(b))
+
+
+def _top_k(scored: DataFrame, k: int, query_id_col: str, id_col: str) -> DataFrame:
+    """The ``k`` best ``cos_sim`` rows per query, ranked ``rnk`` 1..k
+    (ties to the lower corpus id)."""
+    w = Window.partitionBy(query_id_col).orderBy(F.desc("cos_sim"), F.asc(id_col))
+    return scored.withColumn("rnk", F.row_number().over(w).cast("long")).where(
+        F.col("rnk") <= k
+    )
 
 
 def brute_force_topk(
@@ -55,13 +66,7 @@ def brute_force_topk(
         id_col,
         F.round(cosine(F.col("_qv"), F.col("_cv")), 6).alias("cos_sim"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("cos_sim"), F.asc(id_col)
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .where(F.col("rnk") <= k)
-    )
+    return _top_k(scored, k, query_id_col, id_col)
 
 
 def random_hyperplane_signatures(
@@ -148,38 +153,17 @@ def lsh_topk(
     is proportional to bucket occupancy, not corpus size.
     ``portable=True`` uses md5-parity hyperplanes so a SQL oracle can
     replay the candidate set."""
-    bits = planes // bands
-    mask = (1 << bits) - 1
-
-    def band_cols(df, idc):
-        s = random_hyperplane_signatures(
-            df, dim, planes, idc, vec_col, seed, portable=portable
+    q = queries.select(F.col(id_col).alias(query_id_col), F.col(vec_col))
+    qb, cb = (
+        explode_bands(
+            random_hyperplane_signatures(
+                rel, dim, planes, idc, vec_col, seed, portable=portable
+            ),
+            [idc, vec_col],
+            bit_bands("lsh_sig", bands, planes // bands),
         )
-        return s.select(
-            F.col(idc),
-            F.col(vec_col),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band"),
-                            F.shiftrightunsigned(F.col("lsh_sig"), b * bits)
-                            .bitwiseAND(F.lit(mask))
-                            .alias("bucket"),
-                        )
-                        for b in range(bands)
-                    ]
-                )
-            ).alias("bb"),
-        ).select(
-            idc, vec_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
-        )
-
-    qb = band_cols(
-        queries.select(F.col(id_col).alias(query_id_col), F.col(vec_col)),
-        query_id_col,
+        for rel, idc in ((q, query_id_col), (corpus, id_col))
     )
-    cb = band_cols(corpus, id_col)
     cand = (
         cb.join(
             F.broadcast(qb.select(query_id_col, "band", "bucket", F.col(vec_col).alias("_qv"))),
@@ -194,11 +178,7 @@ def lsh_topk(
         id_col,
         F.round(cosine(F.col("_qv"), F.col("_cv")), 6).alias("cos_sim"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cos_sim"), F.asc(id_col))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .where(F.col("rnk") <= k)
-    )
+    return _top_k(scored, k, query_id_col, id_col)
 
 
 def _centroid_array(cents: DataFrame) -> Column:
@@ -569,11 +549,7 @@ def ivf_topk(
         id_col,
         F.round(cosine(F.col("_qv"), F.col(vec_col)), 6).alias("cos_sim"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cos_sim"), F.asc(id_col))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .where(F.col("rnk") <= k)
-    )
+    return _top_k(scored, k, query_id_col, id_col)
 
 
 def embedding_near_duplicates(
@@ -592,49 +568,17 @@ def embedding_near_duplicates(
     MinHash-LSH text dedup). ``portable=True`` makes the hyperplanes
     md5-parity-derived so a SQL oracle can replay the exact candidate
     set."""
-    bits = planes // bands
-    mask = (1 << bits) - 1
     s = random_hyperplane_signatures(
         df, dim, planes, id_col, vec_col, seed, portable=portable
     )
-    banded = s.select(
-        F.col(id_col),
-        F.col(vec_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftrightunsigned(F.col("lsh_sig"), b * bits)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select(id_col, vec_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-    a = banded.alias("a")
-    b = banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col(f"a.{vec_col}").alias("_va"),
-            F.col(f"b.{vec_col}").alias("_vb"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
+    banded = explode_bands(
+        s, [id_col, vec_col], bit_bands("lsh_sig", bands, planes // bands)
     )
+    cand = band_pairs(banded, id_col, carry=(vec_col,))
     return cand.select(
         "id_a",
         "id_b",
-        F.round(cosine(F.col("_va"), F.col("_vb")), 6).alias("cos_sim"),
+        F.round(cosine(F.col(f"{vec_col}_a"), F.col(f"{vec_col}_b")), 6).alias("cos_sim"),
     ).where(F.col("cos_sim") >= threshold)
 
 

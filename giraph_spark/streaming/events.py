@@ -441,8 +441,8 @@ def near_dup_stream(
     from pyspark.sql.types import LongType, StructField, StructType
 
     from ..functions.hashing import normalize_text
+    from ..functions.lsh import explode_bands, minhash_band_keys
 
-    rows = num_hashes // bands
     src = docs if ts_col == "ts" else docs.withColumnRenamed(ts_col, "ts")
     ts_col = "ts"  # _with_watermark operates on the canonical ts name
     # signature as a PURE EXPRESSION: min-hash over the in-row shingle
@@ -481,35 +481,9 @@ def near_dup_stream(
         )
     )
 
-    def band_bucket(b: int):
-        joined = F.concat_ws(
-            ",",
-            *[
-                F.col("sig").getItem(b * rows + r).cast("string")
-                for r in range(rows)
-            ],
-        )
-        return F.xxhash64(joined)
-
-    banded = sig.select(
-        F.col(id_col),
-        F.col(ts_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).cast("long").alias("band"),
-                        band_bucket(b).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("_bb"),
-    ).select(
-        id_col, ts_col,
-        F.col("_bb.band").alias("band"),
-        F.col("_bb.bucket").alias("bucket"),
-    )
+    banded = explode_bands(
+        sig, [id_col, ts_col], minhash_band_keys(num_hashes, bands)
+    ).withColumn("band", F.col("band").cast("long"))
 
     out_schema = StructType(
         [

@@ -80,6 +80,18 @@ def test_minhash_signature_shape(docs):
     assert by_id[1] == by_id[3]  # identical normalized text ⇒ identical sig
 
 
+def test_minhash_signatures_sign_each_row_independently(spark, docs):
+    """The documented contract of the default (Arrow) signature path:
+    two rows sharing an id are not merged — each yields its own
+    signature row, equal to that of its text signed alone."""
+    alone = {r.doc_id: r.sig for r in minhash_signatures(docs, num_hashes=16).collect()}
+    shared = docs.where(F.col("doc_id").isin(1, 4)).withColumn(
+        "doc_id", F.lit(9).cast("long")
+    )
+    got = [r.sig for r in minhash_signatures(shared, num_hashes=16).collect()]
+    assert sorted(got) == sorted([alone[1], alone[4]])
+
+
 def test_simhash_near_pairs(docs):
     pairs = {(r.id_a, r.id_b): r.hamming for r in simhash_near_pairs(docs).collect()}
     assert pairs.get((1, 3)) == 0

@@ -7,6 +7,7 @@ one executor)."""
 import pytest
 from pyspark.sql import functions as F
 
+from giraph_spark.functions import dedup
 from giraph_spark.plans.fixtures import trade_graph
 from giraph_spark.pregel import PregelMetrics, pregel
 from tests.plan_text import formatted_plan as _formatted_plan
@@ -101,16 +102,29 @@ def test_sketch_ops_never_cartesian(spark, sf_dir):
     BroadcastNestedLoopJoin in any of these plans means the blocking
     scheme silently degenerated to all-pairs."""
     from giraph_spark.functions.dedup import (
+        fuzzy_decontaminate,
         minhash_lsh_pairs,
         ngram_jaccard_pairs,
         simhash_near_pairs,
     )
-    from giraph_spark.functions.similarity import embedding_near_duplicates
+    from giraph_spark.functions.imagehash import (
+        DHASH_SCHEMA,
+        banded_hamming_pairs,
+        u64_hash_fields,
+    )
+    from giraph_spark.functions.similarity import embedding_near_duplicates, lsh_topk
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    bench = docs.limit(20).select(F.col("doc_id").alias("bench_id"), "text")
     embs = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
         F.col("vec_id").cast("long").alias("vec_id"),
         F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
+    )
+    hashes = spark.createDataFrame(
+        [(i, 9, 8, *u64_hash_fields(h), None) for i, h in enumerate(
+            [0, 1, 0xFFFF, 1 << 63, (1 << 64) - 1, 0x0123456789ABCDEF]
+        )],
+        DHASH_SCHEMA,
     )
     plans = {
         "minhash": _formatted_plan(minhash_lsh_pairs(docs, k=5)),
@@ -119,6 +133,9 @@ def test_sketch_ops_never_cartesian(spark, sf_dir):
         "emb_lsh": _formatted_plan(
             embedding_near_duplicates(embs, dim=64, threshold=0.35)
         ),
+        "fuzzy": _formatted_plan(fuzzy_decontaminate(docs, bench, k=5)),
+        "lsh_topk": _formatted_plan(lsh_topk(embs, embs.limit(5), dim=64)),
+        "dhash": _formatted_plan(banded_hamming_pairs(hashes)),
     }
     for name, plan in plans.items():
         assert "CartesianProduct" not in plan, name
@@ -765,6 +782,53 @@ def test_pairs_to_clusters_leaves_session_as_found(spark):
         1: (1, True), 2: (1, False), 3: (1, False),
         5: (5, True), 7: (5, False), 9: (9, True),
     }
+
+
+def _dedup_corpus_docs(spark):
+    """12 documents: four texts, each once verbatim, once with a short
+    tail and once re-cased — exact and near duplicates in every group."""
+    base = [
+        "the quick brown fox jumps over the lazy dog near the river bank",
+        "a stitch in time saves nine when the weather turns cold and grey",
+        "all that glitters is not gold and all who wander are not lost",
+        "to be or not to be that is the question whether tis nobler",
+    ]
+    rows = [(i, base[i % 4]) for i in range(4)]
+    rows += [(i, base[i % 4] + " again") for i in range(4, 8)]
+    rows += [(i, base[i % 4].upper()) for i in range(8, 12)]
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+_DEDUP_OPS = {
+    "ngram_jaccard_pairs": lambda d: dedup.ngram_jaccard_pairs(d, threshold=0.5),
+    "minhash_lsh_pairs": dedup.minhash_lsh_pairs,
+    "simhash_near_pairs": dedup.simhash_near_pairs,
+    "fuzzy_decontaminate": lambda d: dedup.fuzzy_decontaminate(
+        d, d.where(F.col("doc_id") < 2).withColumnRenamed("doc_id", "bench_id")
+    ),
+    "dedup_corpus": dedup.dedup_corpus,
+    "incremental_dedup": lambda d: dedup.incremental_dedup(
+        d.where(F.col("doc_id") >= 6), d.where(F.col("doc_id") < 6)
+    ),
+}
+
+
+@pytest.mark.parametrize("name", _DEDUP_OPS)
+def test_dedup_operator_leaves_nothing_cached(spark, name):
+    """The dedup operators return lazy frames over sketches they take
+    with a local checkpoint, not ``persist()``: once the result is
+    consumed, nothing is left in the cache manager, the session's
+    width and AQE setting are as found, and the result evaluates again
+    to the same rows."""
+    docs = _dedup_corpus_docs(spark)
+    before = _width_and_aqe(spark)
+    spark.catalog.clearCache()
+    out = _DEDUP_OPS[name](docs)
+    rows = sorted(out.collect())
+    assert rows, name
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert _width_and_aqe(spark) == before
+    assert sorted(out.collect()) == rows
 
 
 @pytest.mark.parametrize("fn", _ROUNDLOOPS)
