@@ -27,7 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import Graph
-from ..pregel import MSG, PregelMetrics, pregel
+from ..pregel import HAS_MSG, MSG, PregelMetrics, pregel
 from ..plans.checkpoint import fresh_checkpoint
 from ..plans.gear import LoopGear
 
@@ -42,12 +42,14 @@ def _label_propagation(
     metrics: PregelMetrics | None,
     **pregel_kwargs,
 ) -> DataFrame:
+    # every vertex sends on superstep 0, the one superstep that computes
+    # without an inbox in this always-halt program
     return pregel(
         graph,
         initial={out_col: init_expr},
-        update=lambda ctx: {
+        update={
             out_col: _merge(combine, out_col),
-            "_changed": F.lit(ctx.superstep == 0)
+            "_changed": ~F.col(HAS_MSG)
             | better(_merge(combine, out_col), F.col(out_col)),
         },
         combine=combine,

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from ..graph import Graph
 from ..plans.gear import LoopGear
-from ..pregel import MSG, PregelMetrics, pregel
+from ..pregel import HAS_MSG, MSG, PregelMetrics, pregel
 
 INF = float("inf")
 
@@ -54,13 +54,13 @@ def sssp(
                 F.lit(INF)
             )
         },
-        # compute: min(old, min inbound); flag improvement (superstep 0:
-        # the source "improves" from nothing to 0 and must send).
-        update=lambda ctx: {
+        # compute: min(old, min inbound); flag improvement (superstep 0,
+        # the one superstep that computes without an inbox in this
+        # always-halt program: the source "improves" from nothing to 0
+        # and must send).
+        update={
             dist_col: F.least(F.col(dist_col), F.col(MSG)),
-            "_improved": (
-                F.lit(ctx.superstep == 0) & (F.col(dist_col) < F.lit(INF))
-            )
+            "_improved": (~F.col(HAS_MSG) & (F.col(dist_col) < F.lit(INF)))
             | (F.coalesce(F.col(MSG), F.lit(INF)) < F.col(dist_col)),
         },
         combine=F.min,
@@ -104,11 +104,9 @@ def bfs(
         initial={
             level_col: F.when(is_seed, F.lit(0)).otherwise(big).cast("long")
         },
-        update=lambda ctx: {
+        update={
             level_col: F.least(F.col(level_col), F.col(MSG)),
-            "_improved": (
-                F.lit(ctx.superstep == 0) & (F.col(level_col) < big)
-            )
+            "_improved": (~F.col(HAS_MSG) & (F.col(level_col) < big))
             | (F.coalesce(F.col(MSG), big) < F.col(level_col)),
         },
         combine=F.min,
@@ -161,16 +159,12 @@ def pivot_distances(
 
     # superstep 0 has no inbox: the pivots "improve" from nothing to 0
     # and must seed the propagation (sssp's seeding rule, vectorized)
-    def upd(ctx):
-        seed = F.lit(ctx.superstep == 0) & F.exists(
-            F.col("_d"), lambda x: x < F.lit(INF)
-        )
-        return {"_d": new_d, "_improved": seed | improved}
+    seed = ~F.col(HAS_MSG) & F.exists(F.col("_d"), lambda x: x < F.lit(INF))
 
     return pregel(
         graph,
         initial={"_d": init},
-        update=upd,
+        update={"_d": new_d, "_improved": seed | improved},
         send_msg=F.when(
             F.col("_improved"), F.expr("transform(_d, x -> x + 1)")
         ),
@@ -467,14 +461,12 @@ def sssp_with_paths(
             ),
             "pred": F.lit(None).cast("long"),
         },
-        update=lambda ctx: {
+        update={
             "distance": F.when(taken, F.col(MSG)["d"]).otherwise(
                 F.col("distance")
             ),
             "pred": F.when(taken, F.col(MSG)["p"]).otherwise(F.col("pred")),
-            "_improved": (
-                F.lit(ctx.superstep == 0) & (F.col("distance") < F.lit(INF))
-            )
+            "_improved": (~F.col(HAS_MSG) & (F.col("distance") < F.lit(INF)))
             | taken,
         },
         combine=F.min,

@@ -49,6 +49,7 @@ collected — which the gear's exit prompts.
 from __future__ import annotations
 
 import gc
+import threading
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -75,6 +76,8 @@ def fit_width(rows: int, ceiling: int) -> int:
 
 _AQE = "spark.sql.adaptive.enabled"
 _PARTS = "spark.sql.shuffle.partitions"
+#: per-thread count of open gears (``depth``)
+_open = threading.local()
 
 
 class LoopGear:
@@ -83,11 +86,15 @@ class LoopGear:
 
     With ``window=True`` (the default) the session's
     ``spark.sql.adaptive.enabled`` / ``spark.sql.shuffle.partitions``
-    are mutated for the loop's duration — AQE off, the width ``width``
-    (default: the session's), which is also the gear's ceiling — and
-    restored on exit. This is a session-global window (see
-    ``pregel.pregel``); concurrent OLAP belongs on ``spark.newSession()``.
-    Set ``floor_rows`` as soon as the loop learns it.
+    are mutated for the loop's duration — AQE off, the session's width,
+    which is also the gear's ceiling, until :meth:`set_width` fixes the
+    loop's own — and restored on exit. This is a session-global window
+    (see ``pregel.pregel``); concurrent OLAP belongs on
+    ``spark.newSession()``. Set ``floor_rows`` as soon as the loop
+    learns it.
+
+    Only the outermost gear of a thread runs the exit ``gc.collect()``:
+    a nested gear's dead references are collected with its parent's.
 
     ``stats``, if given, receives ``rounds`` and ``per_round`` rows
     ``{round, live, partitions, seconds}``.
@@ -97,7 +104,6 @@ class LoopGear:
         self,
         spark: SparkSession,
         *,
-        width: int | None = None,
         window: bool = True,
         stats: dict | None = None,
     ):
@@ -105,7 +111,6 @@ class LoopGear:
         #: rows of the per-round O(V) state rewrite (typically |V|); the
         #: gear never narrows below what they need
         self.floor_rows: int | None = None
-        self.width = width
         self.window = window
         self.stats = stats
         self.ceiling: int = 0
@@ -120,10 +125,8 @@ class LoopGear:
         if self.window:
             self._saved = (conf.get(_AQE, "true"), parts)
             conf.set(_AQE, "false")
-            if self.width is not None:
-                parts = str(self.width)
-                conf.set(_PARTS, parts)
         self.ceiling = self.cur = int(parts)
+        _open.depth = getattr(_open, "depth", 0) + 1
         if self.stats is not None:
             self.stats.update(rounds=0, per_round=[])
         return self
@@ -138,11 +141,21 @@ class LoopGear:
                 pass
         self._persisted.clear()
         # drop this side's py4j references so the ContextCleaner frees
-        # the loop's dead checkpoint blocks promptly
-        gc.collect()
+        # the loop's dead checkpoint blocks promptly — once, by the
+        # outermost gear
+        _open.depth -= 1
+        if not _open.depth:
+            gc.collect()
         if self._saved is not None:
             self.spark.conf.set(_AQE, self._saved[0])
             self.spark.conf.set(_PARTS, self._saved[1])
+
+    def set_width(self, width: int) -> None:
+        """Fix the loop's width, which is also the gear's ceiling, once
+        the loop knows it (e.g. from a count taken inside the window)."""
+        self.ceiling = self.cur = width
+        if self.window:
+            self.spark.conf.set(_PARTS, str(width))
 
     def persist(self, df: DataFrame, level=None) -> DataFrame:
         """``df.persist(level)``, released when the loop exits."""

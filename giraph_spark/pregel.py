@@ -46,6 +46,12 @@ from .graph import Graph
 from .plans.gear import LoopGear, fit_width
 
 MSG = "_msg"
+# True iff the vertex received a message this superstep. In an always-halt
+# program (``vote_to_halt=F.lit(True)``) every vertex is halted after
+# superstep 0, so a vertex that computes without an inbox exists only at
+# superstep 0 — and never on a resumed run. ``~F.col(HAS_MSG)`` is
+# therefore an exact, static "first superstep" predicate there, which
+# keeps such a program free of callables (sssp, bfs, wcc, ...).
 HAS_MSG = "_has_msg"
 HALTED = "_halted"
 ACTIVE = "_gs_active"
@@ -116,6 +122,35 @@ def _resolve(expr: Any, ctx: PregelContext) -> Any:
     return expr(ctx) if callable(expr) and not isinstance(expr, Column) else expr
 
 
+def _is_static(expr: Any) -> bool:
+    """A Column, or a dict of Columns: the same every superstep."""
+    if isinstance(expr, dict):
+        return all(isinstance(v, Column) for v in expr.values())
+    return isinstance(expr, Column)
+
+
+def _per_run(expr: Any, build: Callable[[Any], Any]) -> Callable[[PregelContext], Any]:
+    """``ctx -> build(expr)``, built once when ``expr`` is static; a
+    callable (or a dict holding one) is resolved every superstep."""
+    if _is_static(expr):
+        built = build(expr)
+        return lambda ctx: built
+
+    def per_superstep(ctx: PregelContext) -> Any:
+        r = _resolve(expr, ctx)
+        if isinstance(r, dict):
+            r = {k: _resolve(v, ctx) for k, v in r.items()}
+        return build(r)
+
+    return per_superstep
+
+
+def _rdd_count(df: DataFrame) -> int:
+    """``df.count()`` run on the plan's RDD: the same job, without
+    planning a count aggregate or its SQL-execution bookkeeping."""
+    return df._jdf.queryExecution().toRdd().count()
+
+
 def pregel(graph: Graph, num_partitions: int | None = None, **kwargs) -> DataFrame:
     """Run a Pregel computation; returns the final vertices DataFrame.
     See :func:`_pregel_impl` for the full parameter reference (identical
@@ -152,26 +187,24 @@ def pregel(graph: Graph, num_partitions: int | None = None, **kwargs) -> DataFra
     run on ``spark.newSession()`` (same SparkContext and cache, isolated
     SQL conf), which is free; the pregel run itself is unaffected by
     either choice."""
-    spark = graph.vertices.sparkSession
-    if num_partitions is not None:
-        nparts = num_partitions
-    elif graph.edges_layout is not None:
-        # bucketed input: adopt the storage width so the bucketed scan IS
-        # the loop partitioning and the input repartition disappears
-        nparts = graph.edges_layout[1]
-    else:
-        # one edge count per run (Giraph's input-superstep count); on a
-        # persisted graph it is a cached-count no-op
-        nparts = fit_width(
-            graph.edges.count(),
-            int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
-        )
     # The gear releases every frame the run persists on ANY exit — normal
     # return, master_fn exception, executor loss. Without this, a failed
     # attempt (exactly the case run_with_retries exists for) would leave
     # the cached edge relation + message frames in the block manager, and
     # retries would stack copies until OOM.
-    with LoopGear(spark, width=nparts) as gear:
+    with LoopGear(graph.vertices.sparkSession) as gear:
+        if num_partitions is not None:
+            nparts = num_partitions
+        elif graph.edges_layout is not None:
+            # bucketed input: adopt the storage width so the bucketed scan
+            # IS the loop partitioning and the input repartition disappears
+            nparts = graph.edges_layout[1]
+        else:
+            # one edge count per run (Giraph's input-superstep count),
+            # taken inside the AQE-off window so it is one job, not AQE's
+            # two; on a persisted graph it is a cached-count scan
+            nparts = fit_width(graph.edges.count(), gear.ceiling)
+        gear.set_width(nparts)
         return _pregel_impl(graph, _gear=gear, **kwargs)
 
 
@@ -486,11 +519,55 @@ def _pregel_impl(
             vertices = vertices.withColumns(
                 {k: _resolve(v, ctx) for k, v in initial.items()}
             )
-    if HALTED not in vertices.columns:
+    # the state's column set, tracked on the driver: asking the frame for
+    # its columns every superstep is a schema round trip
+    cols = set(vertices.columns)
+    if HALTED not in cols:
         vertices = vertices.withColumn(HALTED, F.lit(False))
+        cols.add(HALTED)
 
     edges = graph.edges
     spark = vertices.sparkSession
+
+    # Loop-invariant Columns, built once per run. Every Column built on
+    # the driver costs py4j round trips (PySpark's call-site wrapper adds
+    # a session lookup, a conf read and an origin set/clear to each), and
+    # rebuilding the same trees every superstep would cost more driver
+    # time than the superstep's own job. Callables are resolved every
+    # superstep; the Columns of a static program (sssp, bfs, wcc, ...)
+    # are wrapped once.
+    id_key = F.col(id_col)
+    is_active = F.col(ACTIVE)
+    not_halted = ~F.col(HALTED)
+    has_msg = F.coalesce(F.col(HAS_MSG), F.lit(False))
+    null_msg = F.lit(None).cast(msg_type) if msg_type else F.lit(None)
+    no_inbox = {MSG: null_msg, HAS_MSG: F.lit(False), ACTIVE: not_halted}
+    inbox_fill = {HAS_MSG: has_msg, ACTIVE: not_halted | has_msg}
+    inbox_key = F.col("_dst").alias(id_col)
+    inbox_flag = F.lit(True).alias(HAS_MSG)
+    inbox_aggs: dict[Any, Column] = {}  # combiner -> its inbox aggregate
+    sent = F.col("_m").isNotNull()
+    halt_of = _per_run(
+        F.lit(False) if vote_to_halt is None else vote_to_halt,
+        lambda h: F.when(is_active, h).otherwise(F.col(HALTED)),
+    )
+    aggs_of = _per_run(
+        aggregates or {}, lambda d: [v.alias(k) for k, v in d.items()]
+    )
+
+    def when_active(upd: dict[str, Column]) -> dict[str, Column]:
+        # the update applies where the vertex computes; elsewhere the old
+        # value stays (NULL for a column the update adds)
+        return {
+            k: F.when(is_active, v).otherwise(F.col(k) if k in cols else F.lit(None))
+            for k, v in upd.items()
+        }
+
+    # a static update's wrappers differ only by which of its columns the
+    # state already has — superstep 0 of a fresh run vs. every later one
+    static_update: dict[frozenset, dict[str, Column]] | None = (
+        {} if _is_static(update) else None
+    )
 
     # Pre-partition the (static) edge relation by its join key ONCE and
     # keep it cached: every superstep's triplet join then sees a
@@ -507,25 +584,39 @@ def _pregel_impl(
         # DataFrame default MEMORY_AND_DISK_DESER the other loops use
         return _gear.persist(df, StorageLevel.MEMORY_AND_DISK)
 
-    edges_by_src: DataFrame | None = None
-    edges_by_dst: DataFrame | None = None
+    # the send phase's triplet joins: (cached edges keyed on `key`, join
+    # condition, message target, ctx -> message Column); the computing
+    # state is aliased `_v` and the edges `_e`, so the condition is built
+    # once, not resolved against each superstep's frame
+    sends = []
     if messages_fn is None:
-        if send_msg is not None:
-            if graph.edges_layout == (src_col, nparts):
+        for expr, key, target in (
+            (send_msg, src_col, dst_col),
+            (send_msg_to_src, dst_col, src_col),
+        ):
+            if expr is None:
+                continue
+            if key == src_col and graph.edges_layout == (src_col, nparts):
                 # bucketed storage already hash-partitions edges on src at
                 # the loop width: cache the scan as-is, zero input shuffle
-                edges_by_src = persist(edges)
+                e = persist(edges)
                 metrics.run_info["edges_from_storage_layout"] = True
             else:
-                edges_by_src = persist(edges.repartition(nparts, F.col(src_col)))
-        if send_msg_to_src is not None:
-            edges_by_dst = persist(edges.repartition(nparts, F.col(dst_col)))
+                e = persist(edges.repartition(nparts, F.col(key)))
+            sends.append(
+                (
+                    e.alias("_e"),
+                    F.col(f"_v.`{id_col}`") == F.col(f"_e.`{key}`"),
+                    F.col(target).alias("_dst"),
+                    _per_run(expr, lambda m: m.alias("_m")),
+                )
+            )
 
     if _resume is None and graph.vertices_layout == (id_col, nparts):
         vertices = persist(vertices)
         metrics.run_info["vertices_from_storage_layout"] = True
     else:
-        vertices = persist(vertices.repartition(nparts, F.col(id_col)))
+        vertices = persist(vertices.repartition(nparts, id_key))
     if messages is not None:
         messages = persist(messages)
     prev_vertices: DataFrame | None = None
@@ -533,21 +624,21 @@ def _pregel_impl(
     hot_row: dict[str, Any] | None = None  # a hot-key observation (skew_metrics)
     skew_warned = False
 
-    null_msg = F.lit(None).cast(msg_type) if msg_type else F.lit(None)
-
     for superstep in range(start, max_supersteps):
         ctx.superstep = superstep
         t0 = time.monotonic()
 
         # 1. Deliver: group inbox by destination, combine. (The previous
         #    superstep's engine columns are replaced, not duplicated.)
-        base = vertices.drop(MSG, HAS_MSG, ACTIVE)
         salted_this = False
         if messages is None:
-            joined = base.withColumns({MSG: null_msg, HAS_MSG: F.lit(False)})
+            joined = vertices.withColumns(no_inbox)
         else:
             cmb = combine_fn(ctx) if combine_fn is not None else combine
-            agg = (cmb(F.col("_m")) if cmb else F.collect_list("_m")).alias(MSG)
+            if cmb not in inbox_aggs:
+                inbox_aggs[cmb] = (
+                    cmb(F.col("_m")) if cmb else F.collect_list("_m")
+                ).alias(MSG)
             src_msgs = messages
             if hot_row is not None and cmb in _SELF_DECOMPOSABLE:
                 # Two-phase salted delivery (skew response): phase 1
@@ -583,11 +674,7 @@ def _pregel_impl(
                     "algos.components.core_numbers).",
                     stacklevel=2,
                 )
-            inbox = (
-                src_msgs.groupBy(F.col("_dst").alias(id_col))
-                .agg(agg)
-                .withColumn(HAS_MSG, F.lit(True))
-            )
+            inbox = src_msgs.groupBy(inbox_key).agg(inbox_aggs[cmb], inbox_flag)
             # shuffle_hash hint: the state side is already hash-partitioned
             # on id (from the previous superstep's checkpoint), so this join
             # only shuffles the (combined) inbox — the message-delivery
@@ -595,9 +682,12 @@ def _pregel_impl(
             # the inbox every superstep: wasted driver round-trips here, an
             # OOM at cluster scale where the inbox is as big as the vertex
             # set.
-            joined = base.join(
-                inbox.hint("shuffle_hash"), on=id_col, how="left"
-            ).withColumn(HAS_MSG, F.coalesce(F.col(HAS_MSG), F.lit(False)))
+            joined = (
+                vertices.drop(MSG, HAS_MSG, ACTIVE)
+                .join(inbox.hint("shuffle_hash"), on=id_col, how="left")
+                .withColumns(inbox_fill)
+            )
+        cols.update((MSG, HAS_MSG, ACTIVE))
 
         # 2. Active set: not-halted ∪ woken-by-message
         #    (ComputeCallable.java:335-338). The update is applied as
@@ -605,26 +695,18 @@ def _pregel_impl(
         #    reference to `joined`) rather than filter+union — a union
         #    would embed the previous superstep's plan multiple times and
         #    make the logical plan grow as 3^superstep.
-        active = ~F.col(HALTED) | F.col(HAS_MSG)
-        joined = joined.withColumn(ACTIVE, active)
-        upd = _resolve(update, ctx)
-        upd = {k: _resolve(v, ctx) for k, v in upd.items()}
-        existing = set(joined.columns)
-        cond_upd = {
-            k: F.when(F.col(ACTIVE), v).otherwise(
-                F.col(k) if k in existing else F.lit(None)
-            )
-            for k, v in upd.items()
-        }
-        state = joined.withColumns(cond_upd)
-        halt_expr = (
-            _resolve(vote_to_halt, ctx) if vote_to_halt is not None else F.lit(False)
-        )
+        if static_update is None:
+            upd = {k: _resolve(v, ctx) for k, v in _resolve(update, ctx).items()}
+            cond_upd = when_active(upd)
+        else:
+            present = frozenset(k for k in update if k in cols)
+            if present not in static_update:
+                static_update[present] = when_active(update)
+            cond_upd = static_update[present]
+        cols.update(cond_upd)
         # vote_to_halt is evaluated after the update batch (sees new values,
         # as Giraph's voteToHalt inside compute() does).
-        state = state.withColumn(
-            HALTED, F.when(F.col(ACTIVE), halt_expr).otherwise(F.col(HALTED))
-        )
+        state = joined.withColumns(cond_upd).withColumn(HALTED, halt_of(ctx))
 
         # 3. Materialize + truncate lineage EVERY superstep. Truncation is
         #    correctness-of-operation, not an optimization: every other
@@ -643,12 +725,12 @@ def _pregel_impl(
         #    materializing action runs downstream of the checkpoint, so
         #    obs.get returns {name: None}. The separate aggregates action
         #    below stays.)
-        computed = state.filter(F.col(ACTIVE))
+        computed = state.filter(is_active)
         new_messages: DataFrame | None = None
         skew_row: dict[str, Any] | None = None
         if messages_fn is not None:
             new_messages = messages_fn(computed, edges, ctx)
-        else:
+        elif sends:
             # shuffle_hash hint on the state side: state is hash-partitioned
             # on id and the cached edge relation on src (resp. dst), so the
             # triplet join is fully co-partitioned — ZERO exchange, build
@@ -657,45 +739,29 @@ def _pregel_impl(
             # superstep (observed via .explain) — wrong at any scale where
             # edges don't fit one executor, and measurable overhead even
             # locally.
-            parts = []
-            if send_msg is not None:
-                e = edges_by_src if edges_by_src is not None else edges
-                triplet = computed.hint("shuffle_hash").join(
-                    e, computed[id_col] == e[src_col]
+            v = computed.alias("_v").hint("shuffle_hash")
+            for e, on, target, msg_of in sends:
+                part = v.join(e, on).select(target, msg_of(ctx))
+                new_messages = (
+                    part if new_messages is None else new_messages.unionByName(part)
                 )
-                parts.append(
-                    triplet.select(
-                        F.col(dst_col).alias("_dst"),
-                        _resolve(send_msg, ctx).alias("_m"),
-                    )
-                )
-            if send_msg_to_src is not None:
-                e = edges_by_dst if edges_by_dst is not None else edges
-                triplet = computed.hint("shuffle_hash").join(
-                    e, computed[id_col] == e[dst_col]
-                )
-                parts.append(
-                    triplet.select(
-                        F.col(src_col).alias("_dst"),
-                        _resolve(send_msg_to_src, ctx).alias("_m"),
-                    )
-                )
-            if parts:
-                new_messages = parts[0]
-                for p in parts[1:]:
-                    new_messages = new_messages.unionByName(p)
         # Single action per superstep: counting the messages materializes
         # the (lazily checkpointed) state as a by-product, since messages
         # derive from it. Giraph's per-superstep barrier = this one job.
+        # The count runs on the plan's RDD: the same job, without planning
+        # a count aggregate or its SQL-execution bookkeeping.
         if new_messages is not None:
-            new_messages = new_messages.filter(F.col("_m").isNotNull())
+            new_messages = new_messages.filter(sent)
             if metrics.capture_plans:
                 import contextlib
                 import io
 
                 buf = io.StringIO()
                 with contextlib.redirect_stdout(buf):
-                    new_messages.explain("formatted")
+                    # explained through an alias: planning new_messages
+                    # itself now would fix its plan before the persist,
+                    # and the count below would then bypass the cache
+                    new_messages.alias("_send").explain("formatted")
                 metrics.plans.append(buf.getvalue())
             new_messages = persist(new_messages)
             if skew_metrics:
@@ -719,21 +785,15 @@ def _pregel_impl(
                 )
                 hot_row = skew_row if hot else None
             else:
-                ctx.num_messages = new_messages.count()
+                ctx.num_messages = _rdd_count(new_messages)
         else:
-            state.count()  # still must materialize before releasing prev
+            _rdd_count(state)  # still must materialize before releasing prev
             ctx.num_messages = 0
 
         # 5. Global aggregates → driver (partial-per-worker + merge is
         #    Spark's partial aggregation; ≡ WorkerAggregatorHandler).
         if aggregates:
-            row = new_vertices.agg(
-                *[
-                    _resolve(expr, ctx).alias(name)
-                    for name, expr in aggregates.items()
-                ]
-            ).collect()[0]
-            ctx.aggregates = row.asDict()
+            ctx.aggregates = new_vertices.agg(*aggs_of(ctx)).collect()[0].asDict()
 
         # 6. Master compute (driver).
         ctx.vertices = new_vertices
@@ -800,10 +860,7 @@ def _pregel_impl(
         if ctx._halt:
             break
         if ctx.num_messages == 0:
-            any_active = (
-                vertices.filter(~F.col(HALTED)).limit(1).count() > 0
-            )
-            if not any_active:
+            if vertices.filter(not_halted).limit(1).count() == 0:
                 break
 
         # 9. Adaptive gear change: re-size the loop's shuffle width from
@@ -812,19 +869,21 @@ def _pregel_impl(
         #    frontier fans out by the average degree each superstep, and
         #    gearing down just before the explosion serializes the heavy
         #    supersteps (measured 1.5× slower). The width never drops
-        #    below what the per-superstep O(V) state rewrite needs. Gear-up
-        #    is always allowed (guards against post-decline regrowth). The
-        #    2× hysteresis bounds state re-keys to O(log nparts) per run;
-        #    each re-key exchange folds into the next superstep's job.
+        #    below what the per-superstep O(V) state rewrite needs — a
+        #    vertex count taken only when the gear could narrow (at width
+        #    1 it buys nothing). Gear-up is always allowed (guards against
+        #    post-decline regrowth). The 2× hysteresis bounds state re-keys
+        #    to O(log nparts) per run; each re-key exchange folds into the
+        #    next superstep's job.
         if new_messages is not None:
-            if _gear.floor_rows is None:
+            if _gear.floor_rows is None and _gear.cur > 1:
                 _gear.floor_rows = vertices.count()
             width = _gear.cur
             declining = prev_msg_count is not None and (
                 ctx.num_messages < prev_msg_count
             )
             if _gear.resize(ctx.num_messages, declining) != width:
-                vertices = vertices.repartition(_gear.cur, F.col(id_col))
+                vertices = vertices.repartition(_gear.cur, id_key)
             prev_msg_count = ctx.num_messages
 
     return vertices.drop(MSG, HAS_MSG, HALTED, ACTIVE)

@@ -25,12 +25,16 @@ import os
 import textwrap
 
 
+def _is_pkg(module: str) -> bool:
+    return module == "giraph_spark" or module.startswith("giraph_spark.")
+
+
 def giraph_module_graph(pkg_root: str):
     """(module -> source sha256, module -> giraph_spark modules it
     imports) for every module under ``pkg_root`` (the giraph_spark
-    package directory)."""
-    import re
-
+    package directory). Imports are read from the parsed module, so a
+    function-local import counts and an import-like line inside a
+    string does not."""
     pkg_parent = os.path.dirname(os.path.abspath(pkg_root))
     mod_hash: dict[str, str] = {}
     raw_imports: dict[str, list[tuple[str, list[str]]]] = {}
@@ -49,15 +53,13 @@ def giraph_module_graph(pkg_root: str):
                 src = fh.read()
             mod_hash[name] = hashlib.sha256(src.encode()).hexdigest()
             imps = []
-            for m in re.finditer(
-                r"^\s*from\s+(\.+[\w.]*|giraph_spark[.\w]*)\s+import\s+"
-                r"\(?([\w,\s]+)\)?",
-                src,
-                re.M,
-            ):
-                imps.append((m.group(1), re.findall(r"\w+", m.group(2))))
-            for m in re.finditer(r"^\s*import\s+(giraph_spark[.\w]*)", src, re.M):
-                imps.append((m.group(1), []))
+            for node in ast.walk(ast.parse(src)):
+                if isinstance(node, ast.ImportFrom):
+                    base = "." * node.level + (node.module or "")
+                    if node.level or _is_pkg(base):
+                        imps.append((base, [a.name for a in node.names]))
+                elif isinstance(node, ast.Import):
+                    imps.extend((a.name, []) for a in node.names if _is_pkg(a.name))
             raw_imports[name] = imps
     mod_deps: dict[str, set] = {}
     for name, imps in raw_imports.items():

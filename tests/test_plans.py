@@ -585,9 +585,11 @@ def test_loop_gear_resizes_and_restores(spark):
         assert gear.resize(1) == 1
     assert conf.get("spark.sql.shuffle.partitions") == parts0
     assert conf.get("spark.sql.adaptive.enabled") == aqe0
-    # an explicit width is the ceiling; restores and releases on error too
+    # a width fixed in the window is the ceiling; restores and releases
+    # on error too
     with pytest.raises(RuntimeError, match="boom"):
-        with LoopGear(spark, width=3) as gear:
+        with LoopGear(spark) as gear:
+            gear.set_width(3)
             assert conf.get("spark.sql.shuffle.partitions") == "3"
             assert gear.resize(ROWS_PER_PARTITION * 10_000) == 3
             gear.persist(spark.range(10)).count()
@@ -1021,3 +1023,53 @@ def test_broadcast_limit_plain_bytes_suffix():
 
     # 1 GiB expressed in Spark's plain-bytes form -> 64 MiB floor
     assert broadcast_limit_bytes(_Spark("1073741824b")) == 64 << 20
+
+
+def _tree_ancestors(tree: list[str], i: int) -> list[str]:
+    """The ancestors of node line ``i`` of a formatted plan's tree."""
+
+    def depth(line: str) -> int:
+        return len(line) - len(line.lstrip(" :+-"))
+
+    out, d = [], depth(tree[i])
+    for line in reversed(tree[:i]):
+        if depth(line) < d:
+            out.append(line)
+            d = depth(line)
+    return out
+
+
+@pytest.mark.parametrize("alg", ["sssp", "wcc"])
+def test_width1_send_plans_shuffle_only_inside_the_edge_cache(spark, tmp_path, alg):
+    """At auto width 1 every send plan's Exchanges sit under the cached
+    edge relation's InMemoryRelation: the cache's own SinglePartition
+    repartition (and, for wcc, its symmetrize), built once — no
+    per-superstep shuffle of the state or the edges. Spark keeps the
+    join's single-partition sides in place only while their size
+    estimates stay under ``spark.sql.maxSinglePartitionBytes``: an input
+    of unknown size (a DataFrame built from local Python rows) plans a
+    ``hashpartitioning(…, 1)`` re-shuffle of both sides instead, whereas
+    a parquet or cached input like this one does not."""
+    from giraph_spark.algos import sssp, wcc
+    from giraph_spark.sources import load_graph
+
+    spark.createDataFrame([(i,) for i in range(12)], "id long").write.parquet(
+        f"{tmp_path}/vertices"
+    )
+    spark.createDataFrame(
+        [(i, i + 1, 1.0) for i in range(11)] + [(i + 1, i, 1.0) for i in range(11)],
+        "src long, dst long, weight double",
+    ).write.parquet(f"{tmp_path}/edges")
+    g = load_graph(spark, str(tmp_path))
+    m = PregelMetrics(capture_plans=True)
+    (sssp(g, 0, metrics=m) if alg == "sssp" else wcc(g, metrics=m)).count()
+    assert {s["partitions"] for s in m.supersteps} == {1}
+    assert len(m.plans) == m.num_supersteps
+    for plan in m.plans:
+        tree = plan.split("\n\n")[0].splitlines()
+        exchanges = [i for i, line in enumerate(tree) if "Exchange" in line]
+        assert exchanges
+        for i in exchanges:
+            assert any(
+                "InMemoryRelation" in a for a in _tree_ancestors(tree, i)
+            ), plan
