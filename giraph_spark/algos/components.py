@@ -27,45 +27,33 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import Graph
-from ..pregel import HAS_MSG, MSG, PregelMetrics, pregel
+from ..pregel import MSG, PregelMetrics, pregel, propagate
 from ..plans.checkpoint import fresh_checkpoint
 from ..plans.gear import LoopGear
 
 
-def _label_propagation(
-    graph: Graph,
-    combine,
-    better,  # better(new, old) -> bool Column: strict improvement
-    init_expr,
-    out_col: str,
-    max_supersteps: int,
-    metrics: PregelMetrics | None,
-    **pregel_kwargs,
+def _flood(
+    graph: Graph, combine, out_col: str, max_supersteps: int,
+    metrics: PregelMetrics | None, **pregel_kwargs,
 ) -> DataFrame:
-    # every vertex sends on superstep 0, the one superstep that computes
-    # without an inbox in this always-halt program
-    return pregel(
+    """Label flooding from each vertex's own id: every vertex sends its
+    label on superstep 0, then only when the combined inbound label
+    (``combine``: ``F.min`` or ``F.max``) changes it."""
+    label = F.col(out_col)
+    merged = (F.least if combine is F.min else F.greatest)(label, F.col(MSG))
+    return propagate(
         graph,
-        initial={out_col: init_expr},
-        update={
-            out_col: _merge(combine, out_col),
-            "_changed": ~F.col(HAS_MSG)
-            | better(_merge(combine, out_col), F.col(out_col)),
-        },
+        initial={out_col: F.col(graph.id_col).cast("long")},
+        update={out_col: merged},
+        seed=F.lit(True),
+        improved=merged != label,
+        send=label,
         combine=combine,
         msg_type="long",
-        send_msg=F.when(F.col("_changed"), F.col(out_col)),
-        vote_to_halt=F.lit(True),
         max_supersteps=max_supersteps,
         metrics=metrics,
         **pregel_kwargs,
-    ).drop("_changed")
-
-
-def _merge(combine, out_col):
-    if combine is F.min:
-        return F.least(F.col(out_col), F.col(MSG))
-    return F.greatest(F.col(out_col), F.col(MSG))
+    )
 
 
 def connected_components(
@@ -79,16 +67,7 @@ def connected_components(
     for undirected semantics, matching the reference's contract). Extra
     keyword arguments pass through to :func:`giraph_spark.pregel.pregel`
     (e.g. ``num_partitions``, ``checkpoint_every``)."""
-    return _label_propagation(
-        graph,
-        F.min,
-        lambda new, old: new < old,
-        F.col(graph.id_col).cast("long"),
-        component_col,
-        max_supersteps,
-        metrics,
-        **pregel_kwargs,
-    )
+    return _flood(graph, F.min, component_col, max_supersteps, metrics, **pregel_kwargs)
 
 
 def wcc(
@@ -252,16 +231,7 @@ def max_propagation(
     """Flood-max (``examples/MaxComputation.java:30-33``): every vertex
     converges to the maximum vertex id reachable backwards; on a symmetric
     graph, the max id of its component."""
-    return _label_propagation(
-        graph,
-        F.max,
-        lambda new, old: new > old,
-        F.col(graph.id_col).cast("long"),
-        out_col,
-        max_supersteps,
-        metrics,
-        **pregel_kwargs,
-    )
+    return _flood(graph, F.max, out_col, max_supersteps, metrics, **pregel_kwargs)
 
 
 def min_propagation(
@@ -276,16 +246,7 @@ def min_propagation(
     the minimum combiner the same way); on a symmetric graph, the min id of
     the component (≡ label-propagation connected components,
     ``examples/ConnectedComponentsComputation.java:49``)."""
-    return _label_propagation(
-        graph,
-        F.min,
-        lambda new, old: new < old,
-        F.col(graph.id_col).cast("long"),
-        out_col,
-        max_supersteps,
-        metrics,
-        **pregel_kwargs,
-    )
+    return _flood(graph, F.min, out_col, max_supersteps, metrics, **pregel_kwargs)
 
 
 def k_core(

@@ -13,14 +13,25 @@ Reference semantics:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import Graph
 from ..plans.gear import LoopGear
-from ..pregel import HAS_MSG, MSG, PregelMetrics, pregel
+from ..pregel import MSG, PregelMetrics, pregel, propagate
 
 INF = float("inf")
+
+
+def _per_pivot(id_col: str, pivots: list, at: float, elsewhere: float) -> Column:
+    """One ``array<double>`` slot per pivot: ``at`` in the slot of the
+    pivot that is this vertex, ``elsewhere`` in every other slot."""
+    return F.array(
+        *[
+            F.when(F.col(id_col) == F.lit(p), F.lit(at)).otherwise(F.lit(elsewhere))
+            for p in pivots
+        ]
+    )
 
 
 def sssp(
@@ -47,31 +58,25 @@ def sssp(
     id_col = graph.id_col
     w = F.col(weight_col) if weight_col else F.lit(1.0)
 
-    return pregel(
+    return propagate(
         graph,
         initial={
             dist_col: F.when(F.col(id_col) == F.lit(source), 0.0).otherwise(
                 F.lit(INF)
             )
         },
-        # compute: min(old, min inbound); flag improvement (superstep 0,
-        # the one superstep that computes without an inbox in this
-        # always-halt program: the source "improves" from nothing to 0
-        # and must send).
-        update={
-            dist_col: F.least(F.col(dist_col), F.col(MSG)),
-            "_improved": (~F.col(HAS_MSG) & (F.col(dist_col) < F.lit(INF)))
-            | (F.coalesce(F.col(MSG), F.lit(INF)) < F.col(dist_col)),
-        },
+        # compute: min(old, min inbound); relax out-edges on improvement
+        # (the source "improves" from nothing to 0 on superstep 0)
+        update={dist_col: F.least(F.col(dist_col), F.col(MSG))},
+        seed=F.col(dist_col) < F.lit(INF),
+        improved=F.coalesce(F.col(MSG), F.lit(INF)) < F.col(dist_col),
+        send=F.col(dist_col) + w,
         combine=F.min,
         msg_type="double",
-        # relax out-edges only on improvement (null ⇒ dropped by kernel)
-        send_msg=F.when(F.col("_improved"), F.col(dist_col) + w),
-        vote_to_halt=F.lit(True),
         max_supersteps=max_supersteps,
         metrics=metrics,
         **pregel_kwargs,
-    ).drop("_improved")
+    )
 
 
 def bfs(
@@ -88,8 +93,6 @@ def bfs(
     ``source`` may be a single id, a list of ids (the reference's seed-set
     form — ``BreadthFirstSearch.java:73`` takes an ``isVertexInSeedSet``
     predicate), or a boolean Column over the vertex columns."""
-    from pyspark.sql import Column
-
     id_col = graph.id_col
     big = F.lit(2**62)
     if isinstance(source, Column):
@@ -99,24 +102,21 @@ def bfs(
     else:
         is_seed = F.col(id_col) == F.lit(source)
 
-    out = pregel(
+    out = propagate(
         graph,
         initial={
             level_col: F.when(is_seed, F.lit(0)).otherwise(big).cast("long")
         },
-        update={
-            level_col: F.least(F.col(level_col), F.col(MSG)),
-            "_improved": (~F.col(HAS_MSG) & (F.col(level_col) < big))
-            | (F.coalesce(F.col(MSG), big) < F.col(level_col)),
-        },
+        update={level_col: F.least(F.col(level_col), F.col(MSG))},
+        seed=F.col(level_col) < big,
+        improved=F.coalesce(F.col(MSG), big) < F.col(level_col),
+        send=F.col(level_col) + F.lit(1),
         combine=F.min,
         msg_type="long",
-        send_msg=F.when(F.col("_improved"), F.col(level_col) + F.lit(1)),
-        vote_to_halt=F.lit(True),
         max_supersteps=max_supersteps,
         metrics=metrics,
         **pregel_kwargs,
-    ).drop("_improved")
+    )
     return out.withColumn(
         level_col, F.when(F.col(level_col) >= big, F.lit(-1)).otherwise(F.col(level_col))
     )
@@ -141,39 +141,27 @@ def pivot_distances(
     from ..aggregators import vector_min
 
     id_col = graph.id_col
-    INF = float("inf")
-    init = F.array(
-        *[
-            F.when(F.col(id_col) == F.lit(p), F.lit(0.0)).otherwise(F.lit(INF))
-            for p in pivots
-        ]
-    )
     new_d = F.zip_with(
         F.col("_d"),
         F.coalesce(F.col("_msg"), F.col("_d")),
         lambda a, b: F.least(a, b),
     )
-    improved = F.exists(
-        F.zip_with(new_d, F.col("_d"), lambda a, b: a < b), lambda x: x
-    )
-
-    # superstep 0 has no inbox: the pivots "improve" from nothing to 0
-    # and must seed the propagation (sssp's seeding rule, vectorized)
-    seed = ~F.col(HAS_MSG) & F.exists(F.col("_d"), lambda x: x < F.lit(INF))
-
-    return pregel(
+    # the pivots "improve" from nothing to 0 on superstep 0 (sssp's
+    # seeding rule, vectorized)
+    return propagate(
         graph,
-        initial={"_d": init},
-        update={"_d": new_d, "_improved": seed | improved},
-        send_msg=F.when(
-            F.col("_improved"), F.expr("transform(_d, x -> x + 1)")
+        initial={"_d": _per_pivot(id_col, pivots, 0.0, INF)},
+        update={"_d": new_d},
+        seed=F.exists(F.col("_d"), lambda x: x < F.lit(INF)),
+        improved=F.exists(
+            F.zip_with(new_d, F.col("_d"), lambda a, b: a < b), lambda x: x
         ),
+        send=F.expr("transform(_d, x -> x + 1)"),
         combine=vector_min,
-        vote_to_halt=F.lit(True),
         max_supersteps=max_supersteps,
         metrics=metrics,
         **pregel_kwargs,
-    ).drop("_improved")
+    )
 
 
 def harmonic_centrality(
@@ -279,18 +267,8 @@ def betweenness_centrality(
     id_col = graph.id_col
     P = len(pivots)
     zeros = f"array_repeat(0.0d, {P})"
-    init_d = F.array(
-        *[
-            F.when(F.col(id_col) == F.lit(p), F.lit(0.0)).otherwise(F.lit(INF))
-            for p in pivots
-        ]
-    )
-    init_sg = F.array(
-        *[
-            F.when(F.col(id_col) == F.lit(p), F.lit(1.0)).otherwise(F.lit(0.0))
-            for p in pivots
-        ]
-    )
+    init_d = _per_pivot(id_col, pivots, 0.0, INF)
+    init_sg = _per_pivot(id_col, pivots, 1.0, 0.0)
 
     def fwd_update(ctx):
         s = float(ctx.superstep)
@@ -328,7 +306,7 @@ def betweenness_centrality(
                 send_msg=fwd_send,
                 combine=vector_sum,
                 msg_type="array<double>",
-                vote_to_halt=F.lit(True),
+                vote_to_halt=True,
                 max_supersteps=max_supersteps,
                 metrics=metrics,
                 **pregel_kwargs,
@@ -453,7 +431,7 @@ def sssp_with_paths(
     id_col = graph.id_col
     w = F.col(weight_col) if weight_col else F.lit(1.0)
     taken = F.col(MSG).isNotNull() & (F.col(MSG)["d"] < F.col("distance"))
-    return pregel(
+    return propagate(
         graph,
         initial={
             "distance": F.when(F.col(id_col) == F.lit(source), 0.0).otherwise(
@@ -466,20 +444,16 @@ def sssp_with_paths(
                 F.col("distance")
             ),
             "pred": F.when(taken, F.col(MSG)["p"]).otherwise(F.col("pred")),
-            "_improved": (~F.col(HAS_MSG) & (F.col("distance") < F.lit(INF)))
-            | taken,
         },
+        seed=F.col("distance") < F.lit(INF),
+        improved=taken,
+        send=F.struct(
+            (F.col("distance") + w).alias("d"),
+            F.col(id_col).cast("long").alias("p"),
+        ),
         combine=F.min,
         msg_type="struct<d:double,p:bigint>",
-        send_msg=F.when(
-            F.col("_improved"),
-            F.struct(
-                (F.col("distance") + w).alias("d"),
-                F.col(id_col).cast("long").alias("p"),
-            ),
-        ),
-        vote_to_halt=F.lit(True),
         max_supersteps=max_supersteps,
         metrics=metrics,
         **pregel_kwargs,
-    ).drop("_improved")
+    )

@@ -30,7 +30,8 @@ from pyspark.sql import functions as F
 from ..graph import Graph
 from ..plans.checkpoint import fresh_checkpoint_count
 from ..plans.gear import LoopGear
-from ..pregel import MSG, PregelMetrics, pregel
+from ..pregel import MSG, PregelMetrics, propagate
+from .components import max_propagation
 
 
 def _converged_or_raise(m: PregelMetrics, phase: str, cap: int) -> None:
@@ -93,20 +94,8 @@ def scc(
 
             # Phase 1: forward max-coloring (FORWARD_TRAVERSAL)
             m_fwd = PregelMetrics()
-            colored = pregel(
-                sub,
-                metrics=m_fwd,
-                initial={"_color": F.col(id_col).cast("long")},
-                update=lambda ctx: {
-                    "_color": F.greatest(F.col("_color"), F.col(MSG)),
-                    "_chg": F.lit(ctx.superstep == 0)
-                    | (F.coalesce(F.col(MSG), F.lit(-(2**62))) > F.col("_color")),
-                },
-                combine=F.max,
-                msg_type="long",
-                send_msg=F.when(F.col("_chg"), F.col("_color")),
-                vote_to_halt=F.lit(True),
-                max_supersteps=max_supersteps,
+            colored = max_propagation(
+                sub, max_supersteps, m_fwd, out_col="_color"
             ).select(id_col, "_color")
             _converged_or_raise(m_fwd, "forward", max_supersteps)
 
@@ -114,30 +103,21 @@ def scc(
             # (BACKWARD_TRAVERSAL): roots send color along reversed edges.
             csub = Graph(colored, e, id_col, src, dst)
             m_bwd = PregelMetrics()
-            member = pregel(
+            accepted = F.col(MSG).isNotNull() & F.array_contains(
+                F.col(MSG), F.col("_color")
+            )
+            member = propagate(
                 csub,
-                metrics=m_bwd,
                 initial={"_member": F.col("_color") == F.col(id_col)},
-                update=lambda ctx: {
-                    "_member": F.col("_member")
-                    | (
-                        F.col(MSG).isNotNull()
-                        & F.array_contains(F.col(MSG), F.col("_color"))
-                    ),
-                    "_chg": (
-                        F.lit(ctx.superstep == 0) & F.col("_member")
-                    )
-                    | (
-                        ~F.col("_member")
-                        & F.col(MSG).isNotNull()
-                        & F.array_contains(F.col(MSG), F.col("_color"))
-                    ),
-                },
+                update={"_member": F.col("_member") | accepted},
+                seed=F.col("_member"),
+                improved=~F.col("_member") & accepted,
+                send=F.col("_color"),
+                to_src=True,
                 combine=F.collect_set,
                 msg_type="array<bigint>",  # type after the combine step
-                send_msg_to_src=F.when(F.col("_chg"), F.col("_color")),
-                vote_to_halt=F.lit(True),
                 max_supersteps=max_supersteps,
+                metrics=m_bwd,
             ).select(id_col, "_color", "_member")
             _converged_or_raise(m_bwd, "backward", max_supersteps)
             if stats is not None:

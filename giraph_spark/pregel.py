@@ -46,13 +46,7 @@ from .graph import Graph
 from .plans.gear import LoopGear, fit_width
 
 MSG = "_msg"
-# True iff the vertex received a message this superstep. In an always-halt
-# program (``vote_to_halt=F.lit(True)``) every vertex is halted after
-# superstep 0, so a vertex that computes without an inbox exists only at
-# superstep 0 — and never on a resumed run. ``~F.col(HAS_MSG)`` is
-# therefore an exact, static "first superstep" predicate there, which
-# keeps such a program free of callables (sssp, bfs, wcc, ...).
-HAS_MSG = "_has_msg"
+HAS_MSG = "_has_msg"  # true iff the vertex received a message this superstep
 HALTED = "_halted"
 ACTIVE = "_gs_active"
 
@@ -208,6 +202,38 @@ def pregel(graph: Graph, num_partitions: int | None = None, **kwargs) -> DataFra
         return _pregel_impl(graph, _gear=gear, **kwargs)
 
 
+def propagate(
+    graph: Graph, *, update: dict[str, Column], seed: Column, improved: Column,
+    send: Column, to_src: bool = False, **kwargs,
+) -> DataFrame:
+    """The always-halt propagation program of the traversal family (sssp,
+    bfs, connected components, flood-min/max, ...): every vertex votes to
+    halt every superstep and wakes only on a message
+    (``examples/SimpleShortestPathsComputation.java:60-85``,
+    ``examples/ConnectedComponentsComputation.java:60-101``; GraphX's
+    Pregel operator), so the run ends on its first superstep that sends
+    no message.
+
+    A computing vertex applies ``update`` and then sends ``send`` (over
+    its updated values) along its out-edges — its in-edges with
+    ``to_src`` — when ``improved`` holds, or, on the first superstep,
+    when ``seed`` holds; both tests see the pre-update values. The first
+    superstep is told by ``~_has_msg``: with every vertex halted after it
+    computes, a vertex computes without an inbox only at superstep 0 —
+    and never on a resumed run. So the predicate is exact, and the
+    program stays free of callables (its Columns are built once per run).
+    Other keyword arguments pass to :func:`pregel`."""
+    kwargs["send_msg_to_src" if to_src else "send_msg"] = F.when(
+        F.col("_improved"), send
+    )
+    return pregel(
+        graph,
+        update={**update, "_improved": (~F.col(HAS_MSG) & seed) | improved},
+        vote_to_halt=True,
+        **kwargs,
+    ).drop("_improved")
+
+
 def _hadoop_fs(spark, path: str):
     """(FileSystem, Path) pair for any Hadoop-supported filesystem."""
     jvm = spark._jvm
@@ -344,7 +370,7 @@ def _pregel_impl(
     combine_fn: Callable[[PregelContext], Callable[[Column], Column] | None] | None = None,
     messages_fn: Callable[[DataFrame, DataFrame, PregelContext], DataFrame] | None = None,
     initial: dict[str, Expr] | None = None,
-    vote_to_halt: Expr | None = None,
+    vote_to_halt: Expr | bool | None = None,
     msg_type: str | None = None,
     aggregates: dict[str, Expr] | None = None,
     master_fn: Callable[[PregelContext], None] | None = None,
@@ -429,7 +455,11 @@ def _pregel_impl(
     vote_to_halt:
         boolean expression evaluated *after* ``update`` (sees new values);
         true ⇒ vertex halts (``Vertex.voteToHalt``, re-activated by any
-        inbound message).
+        inbound message). The Python constant ``True`` declares an
+        always-halt program: every vertex halts after it computes, so
+        every vertex is halted from superstep 0 on and the run ends on its
+        first superstep without messages, with no all-halted probe
+        (:func:`propagate` runs such programs).
     msg_type:
         Spark SQL type of ``_msg`` (the post-combine inbox), used to type
         the all-NULL ``_msg`` of a superstep with no inbox (superstep 0)
@@ -547,8 +577,9 @@ def _pregel_impl(
     inbox_flag = F.lit(True).alias(HAS_MSG)
     inbox_aggs: dict[Any, Column] = {}  # combiner -> its inbox aggregate
     sent = F.col("_m").isNotNull()
+    always_halt = vote_to_halt is True
     halt_of = _per_run(
-        F.lit(False) if vote_to_halt is None else vote_to_halt,
+        F.lit(always_halt) if always_halt or vote_to_halt is None else vote_to_halt,
         lambda h: F.when(is_active, h).otherwise(F.col(HALTED)),
     )
     aggs_of = _per_run(
@@ -853,15 +884,24 @@ def _pregel_impl(
         # 8. Termination: external halt signal (one FS existence probe per
         #    superstep ≡ the master's halt-znode watch), master halt, or
         #    all-halted ∧ no messages (BspServiceMaster.java:1681-1685).
+        #    An always-halt program has every vertex halted already, so it
+        #    ends without the probe. Every other program keeps it: the
+        #    probe is also the job that materializes the final state when
+        #    the last send plan folds to an empty relation (PageRank's
+        #    gated final send). Without it that state is computed after
+        #    the gear has released the message cache, from further back
+        #    (measured on perfbench's pagerank-powerlaw: shuffle read
+        #    6194183 -> 9658459 bytes).
         if state_checkpoint_dir and _consume_halt_file(
             spark, f"{state_checkpoint_dir}/HALT"
         ):
             ctx.halt()
         if ctx._halt:
             break
-        if ctx.num_messages == 0:
-            if vertices.filter(not_halted).limit(1).count() == 0:
-                break
+        if ctx.num_messages == 0 and (
+            always_halt or vertices.filter(not_halted).limit(1).count() == 0
+        ):
+            break
 
         # 9. Adaptive gear change: re-size the loop's shuffle width from
         #    the live message volume (frontier collapse). Gearing down is

@@ -26,6 +26,7 @@ from giraph_spark.sources import (
     uniform_random_graph,
     watts_strogatz_graph,
     write_adjacency_list,
+    write_edge_list,
     write_graphviz,
     write_id_with_value,
     write_json_vertices,
@@ -102,6 +103,29 @@ def test_writers(spark):
     dot = [r.value for r in write_graphviz(g, weight_col="weight").collect()]
     assert dot[0].startswith("digraph") and dot[-1] == "}"
     assert any('"1" -> "2"' in l for l in dot)
+
+
+def test_write_edge_list(spark, tmp_path):
+    """``src dst [weight]`` lines (``SrcIdDstIdEdgeValueTextOutputFormat``):
+    the named columns the relation has, in the given order and separator."""
+    weighted = spark.createDataFrame(
+        [(1, 2, 1.5), (2, 3, 0.5)], "src long, dst long, weight double"
+    )
+
+    def lines(df):
+        return sorted(r.value for r in df.collect())
+
+    assert lines(write_edge_list(weighted)) == ["1\t2\t1.5", "2\t3\t0.5"]
+    # an unweighted relation yields src dst: absent columns are skipped
+    plain = weighted.drop("weight")
+    assert lines(write_edge_list(plain, sep=",")) == ["1,2", "2,3"]
+    assert lines(write_edge_list(weighted, cols=("dst", "src"), sep=" ")) == [
+        "2 1",
+        "3 2",
+    ]
+    out = str(tmp_path / "edges")
+    assert write_edge_list(weighted, out, sep=";") is None
+    assert lines(spark.read.text(out)) == ["1;2;1.5", "2;3;0.5"]
 
 
 def test_generators(spark):

@@ -1,16 +1,19 @@
 """The kernel's per-superstep driver path: a static program (every
 kernel parameter a Column, as sssp, bfs and wcc are) is built once, so
 from superstep 2 on a superstep builds no Column and makes the same py4j
-round trips; its ``~_has_msg`` seeding survives a resume; and a nested
-gear leaves the exit ``gc.collect()`` to the outermost one."""
+round trips; its ``~_has_msg`` seeding survives a resume; an always-halt
+run ends without the all-halted probe; and a nested gear leaves the exit
+``gc.collect()`` to the outermost one."""
 
 import gc
 import importlib
 
 import pytest
+from pyspark.sql import functions as F
 
 from giraph_spark import Graph, PregelMetrics
 from giraph_spark.algos import components, paths
+from giraph_spark.algos.pagerank import pagerank
 from giraph_spark.pregel import resume_pregel
 
 kernel = importlib.import_module("giraph_spark.pregel")
@@ -58,8 +61,20 @@ class _SpyF:
         lambda g, **kw: paths.sssp(g, 0, **kw),
         lambda g, **kw: paths.bfs(g, 0, **kw),
         lambda g, **kw: components.connected_components(g, **kw),
+        lambda g, **kw: paths.sssp_with_paths(g, 0, **kw),
+        lambda g, **kw: paths.pivot_distances(g, [0, 5], **kw),
+        # the chain reversed, so the max id floods the whole path
+        lambda g, **kw: components.max_propagation(
+            Graph(g.vertices, g.edges.select(
+                F.col("dst").alias("src"), F.col("src").alias("dst")
+            )),
+            **kw,
+        ),
     ],
-    ids=["sssp", "bfs", "connected_components"],
+    ids=[
+        "sssp", "bfs", "connected_components", "sssp_with_paths",
+        "pivot_distances", "max_propagation",
+    ],
 )
 def test_static_program_builds_no_column_after_superstep_1(chain, monkeypatch, run):
     spy = _SpyF(kernel.F)
@@ -68,13 +83,13 @@ def test_static_program_builds_no_column_after_superstep_1(chain, monkeypatch, r
         if mod is not kernel:
             # disarm when the kernel returns: the algorithm's own
             # post-processing (bfs' -1 fill) is not a superstep
-            def disarmed(*args, _run=mod.pregel, **kwargs):
+            def disarmed(*args, _run=mod.propagate, **kwargs):
                 try:
                     return _run(*args, **kwargs)
                 finally:
                     spy.armed = False
 
-            monkeypatch.setattr(mod, "pregel", disarmed)
+            monkeypatch.setattr(mod, "propagate", disarmed)
 
     def arm(ctx):
         if ctx.superstep == 1:
@@ -127,10 +142,15 @@ def test_resumed_sssp_matches_uninterrupted(spark, chain, tmp_path, monkeypatch)
         chain, 0, metrics=cut_m, max_supersteps=4,
         state_checkpoint_dir=ckpt, checkpoint_every=2,
     )
-    # the same sssp kernel arguments, restarted from the checkpoint
-    monkeypatch.setattr(
-        paths, "pregel", lambda graph, **kw: resume_pregel(graph, ckpt, **kw)
-    )
+    # the same sssp kernel arguments, restarted from the checkpoint; the
+    # patch is one-shot, as resume_pregel itself enters the kernel's pregel
+    run = kernel.pregel
+
+    def resume_once(graph, **kw):
+        monkeypatch.setattr(kernel, "pregel", run)
+        return resume_pregel(graph, ckpt, **kw)
+
+    monkeypatch.setattr(kernel, "pregel", resume_once)
     res_m = PregelMetrics()
     resumed = {
         r["id"]: r["distance"]
@@ -139,6 +159,42 @@ def test_resumed_sssp_matches_uninterrupted(spark, chain, tmp_path, monkeypatch)
     assert resumed == full
     assert rows(cut_m) + rows(res_m) == rows(full_m)
     assert res_m.supersteps[0]["superstep"] == 4
+
+
+def _jobs_around_message_counts(spark, monkeypatch, run):
+    """(jobs of ``run``, jobs after its last per-superstep message
+    count), read as ``DAGScheduler.nextJobId`` deltas."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    count = kernel._rdd_count
+    after_count = [0]
+
+    def counted(df):
+        n = count(df)
+        after_count[0] = dag.nextJobId()
+        return n
+
+    monkeypatch.setattr(kernel, "_rdd_count", counted)
+    start = dag.nextJobId()
+    run()
+    end = dag.nextJobId()
+    return end - start, end - after_count[0]
+
+
+def test_always_halt_run_makes_no_termination_probe(spark, chain, monkeypatch):
+    """sssp votes to halt every superstep: its run is one edge count plus
+    one message count per superstep, with no all-halted probe after the
+    last. PageRank's halt vote is its own, so its run keeps the probe."""
+    m = PregelMetrics()
+    jobs, tail = _jobs_around_message_counts(
+        spark, monkeypatch, lambda: paths.sssp(chain, 0, metrics=m)
+    )
+    assert m.num_supersteps >= 4
+    assert (jobs, tail) == (1 + m.num_supersteps, 0)
+
+    _, tail = _jobs_around_message_counts(
+        spark, monkeypatch, lambda: pagerank(chain, iterations=3)
+    )
+    assert tail == 1
 
 
 def test_wcc_collects_garbage_once(spark, monkeypatch):
