@@ -191,13 +191,14 @@ def _q_bfs_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
         "is_root", F.coalesce("is_root", F.lit(False))
     )
     # levels are monotone-final once assigned, and the output keeps only
-    # ≤ CHAIN_DEPTH — stopping right past that depth is exact and avoids
-    # running the full ~|chain| supersteps
-    out = bfs(
-        Graph(v, g.edges),
-        source=F.col("is_root"),
-        max_supersteps=CHAIN_DEPTH + 2,
-    )
+    # ≤ CHAIN_DEPTH — halting right past that depth is exact and avoids
+    # running the full ~|chain| supersteps. The halt is the master's: a
+    # run that reaches max_supersteps with its frontier in flight raises.
+    def halt_past_depth(ctx):
+        if ctx.superstep > CHAIN_DEPTH:
+            ctx.halt()
+
+    out = bfs(Graph(v, g.edges), source=F.col("is_root"), master_fn=halt_past_depth)
     return out.where(
         (F.col("level") >= 0) & (F.col("level") <= CHAIN_DEPTH)
     ).select(

@@ -296,7 +296,6 @@ def betweenness_centrality(
             F.expr(f"zip_with(_d, _sg, (d, sg) -> IF(d = {s}d, sg, 0.0d))"),
         )
 
-    metrics = metrics if metrics is not None else PregelMetrics()
     with LoopGear(graph.vertices.sparkSession, window=False) as gear:
         fwd = gear.persist(
             pregel(
@@ -312,19 +311,6 @@ def betweenness_centrality(
                 **pregel_kwargs,
             )
         )
-        # a truncated forward BFS would silently underestimate every score
-        # (vertices beyond the cutoff keep d=∞ and their dependency credit
-        # vanishes) — fail loudly instead, like k_truss on an un-peeled exit
-        if (
-            metrics.num_supersteps >= max_supersteps
-            and metrics.supersteps
-            and metrics.supersteps[-1]["messages"] > 0
-        ):
-            raise RuntimeError(
-                "betweenness_centrality: forward BFS still had an active "
-                f"frontier at max_supersteps={max_supersteps}; raise it above "
-                "the graph's pivot eccentricity"
-            )
         lmax = fwd.select(
             F.max(
                 F.array_max(

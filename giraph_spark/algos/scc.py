@@ -34,22 +34,6 @@ from ..pregel import MSG, PregelMetrics, propagate
 from .components import max_propagation
 
 
-def _converged_or_raise(m: PregelMetrics, phase: str, cap: int) -> None:
-    """A traversal pregel that runs straight into its superstep cap with
-    messages still in flight has NOT converged — its state is a partial
-    propagation, and using it would assign WRONG components (a giant
-    cycle, diameter n, silently splits into arcs). Fail loudly instead,
-    like k_core/k_truss on an unfinished peel."""
-    steps = m.supersteps
-    if len(steps) >= cap and steps[-1]["messages"] > 0:
-        raise RuntimeError(
-            f"scc: {phase} traversal hit max_supersteps={cap} with "
-            "messages still in flight — the component structure needs "
-            "more supersteps (its diameter exceeds the cap); raise "
-            "max_supersteps"
-        )
-
-
 def scc(
     graph: Graph,
     max_rounds: int = 30,
@@ -97,7 +81,6 @@ def scc(
             colored = max_propagation(
                 sub, max_supersteps, m_fwd, out_col="_color"
             ).select(id_col, "_color")
-            _converged_or_raise(m_fwd, "forward", max_supersteps)
 
             # Phase 2: backward membership flood within color class
             # (BACKWARD_TRAVERSAL): roots send color along reversed edges.
@@ -119,7 +102,6 @@ def scc(
                 max_supersteps=max_supersteps,
                 metrics=m_bwd,
             ).select(id_col, "_color", "_member")
-            _converged_or_raise(m_bwd, "backward", max_supersteps)
             if stats is not None:
                 stats["supersteps"] = (
                     stats.get("supersteps", 0)

@@ -39,7 +39,6 @@ from .text import (
     lang_id,
     quality_features,
     quality_filter,
-    quality_score,
     repetition_features,
     scrub_text,
     tfidf_top_terms,

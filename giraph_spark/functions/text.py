@@ -127,26 +127,6 @@ def token_histogram(
     )
 
 
-def quality_score(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Scalar quality score in [0,1]: weighted blend of the features with
-    C4-ish sweet spots (alpha-heavy, some stopwords, moderate word
-    length). Deterministic and SQL-reproducible."""
-    f = quality_features(df, text_col, id_col)
-    score = (
-        0.4 * F.least(F.col("alpha_ratio") / 0.7, F.lit(1.0))
-        + 0.2 * F.least(F.col("stopword_ratio") / 0.3, F.lit(1.0))
-        + 0.2 * (1.0 - F.least(F.col("digit_ratio") / 0.3, F.lit(1.0)))
-        + 0.2
-        * F.when(
-            (F.col("mean_word_len") >= 3) & (F.col("mean_word_len") <= 10),
-            1.0,
-        ).otherwise(0.0)
-    )
-    return f.select(id_col, F.round(score, 6).alias("quality"))
-
-
 # character-frequency profiles (top letters) for a tiny trigram-free
 # language ID heuristic — deterministic, expression-only
 _LANG_MARKERS = {

@@ -2,9 +2,9 @@
 the standalone round loops.
 
 Every iterative algorithm here is a driver loop of checkpoint-truncated
-rounds — the pregel kernel's supersteps, and the Borůvka MSF, matching,
-coloring, MIS, k-truss, k-core, SCC, deadlock and alternating-star
-loops. :class:`LoopGear` owns the mechanics they share, and it is the
+rounds — the pregel kernel's supersteps, the PageRank family's
+power-iteration rounds, and the Borůvka MSF, matching, coloring, MIS,
+k-truss, k-core, SCC, deadlock and alternating-star loops. :class:`LoopGear` owns the mechanics they share, and it is the
 one owner of every call-scoped cached frame and session-conf window in
 the graph library:
 
@@ -36,10 +36,9 @@ the graph library:
 Callers whose shuffles AQE still sizes open it with ``window=False``
 (conf untouched, no gear) for the registry alone: the k-core / s-core
 peel, ``core_numbers``, SCC, deadlock detection, ``wcc`` and
-``label_propagation_communities`` around the kernel, the
-eigenvector / HITS power iterations, betweenness' forward state, and
-``pairs_to_clusters``' pair graph (whose kernel width is
-``fit_width`` of the pair count under the gear's ceiling).
+``label_propagation_communities`` around the kernel, betweenness'
+forward state, and ``pairs_to_clusters``' pair graph (whose kernel
+width is ``fit_width`` of the pair count under the gear's ceiling).
 
 A ``localCheckpoint`` frame needs no release: ``unpersist()`` on it
 frees nothing, and its blocks go when the ContextCleaner sees its RDD

@@ -222,7 +222,9 @@ def propagate(
     computes, a vertex computes without an inbox only at superstep 0 —
     and never on a resumed run. So the predicate is exact, and the
     program stays free of callables (its Columns are built once per run).
-    Other keyword arguments pass to :func:`pregel`."""
+    A run that reaches ``max_supersteps`` with messages in flight raises
+    ``RuntimeError`` rather than return a partial propagation. Other
+    keyword arguments pass to :func:`pregel`."""
     kwargs["send_msg_to_src" if to_src else "send_msg"] = F.when(
         F.col("_improved"), send
     )
@@ -505,7 +507,10 @@ def _pregel_impl(
         de-skews.
     max_supersteps:
         superstep cap (counted from 0, across a resume); the run stops
-        after it even if vertices are still active.
+        after it even if vertices are still active. An always-halt
+        program (``vote_to_halt=True``) that reaches it with messages in
+        flight raises ``RuntimeError``: its state is a partial
+        propagation.
     checkpoint_every:
         the durable-checkpoint cadence below; every ``checkpoint_every``-th
         superstep also drops the driver's py4j references
@@ -887,11 +892,13 @@ def _pregel_impl(
         #    An always-halt program has every vertex halted already, so it
         #    ends without the probe. Every other program keeps it: the
         #    probe is also the job that materializes the final state when
-        #    the last send plan folds to an empty relation (PageRank's
-        #    gated final send). Without it that state is computed after
-        #    the gear has released the message cache, from further back
-        #    (measured on perfbench's pagerank-powerlaw: shuffle read
-        #    6194183 -> 9658459 bytes).
+        #    the last send plan folds to an empty relation, as in a
+        #    program with a superstep-gated final send (betweenness'
+        #    backward sweep, whose level-0 superstep sends nothing).
+        #    Without it that state is computed after the gear has released
+        #    the message cache, from further back (measured when PageRank
+        #    still ran on the kernel: perfbench's pagerank-powerlaw
+        #    shuffle read 6194183 -> 9658459 bytes).
         if state_checkpoint_dir and _consume_halt_file(
             spark, f"{state_checkpoint_dir}/HALT"
         ):
@@ -925,5 +932,16 @@ def _pregel_impl(
             if _gear.resize(ctx.num_messages, declining) != width:
                 vertices = vertices.repartition(_gear.cur, id_key)
             prev_msg_count = ctx.num_messages
+    else:
+        # 10. The cap fails closed for an always-halt program: its state
+        #     with messages in flight is a partial propagation (vertices
+        #     past the frontier keep their initial values), not an answer.
+        #     A master or external halt is deliberate and still returns.
+        if always_halt and ctx.num_messages > 0:
+            raise RuntimeError(
+                f"pregel: max_supersteps={max_supersteps} reached with "
+                f"{ctx.num_messages} messages still in flight; the "
+                "propagation has not converged — raise max_supersteps"
+            )
 
     return vertices.drop(MSG, HAS_MSG, HALTED, ACTIVE)

@@ -294,7 +294,7 @@ def test_betweenness_raises_on_truncated_bfs(spark):
         [(a, b) for a, b in path] + [(b, a) for a, b in path], "src long, dst long"
     )
     v = spark.createDataFrame([(i,) for i in range(7)], "id long")
-    with pytest.raises(RuntimeError, match="forward BFS"):
+    with pytest.raises(RuntimeError, match="max_supersteps"):
         betweenness_centrality(Graph(v, e), pivots=[0], max_supersteps=3)
 
 

@@ -715,9 +715,17 @@ _ISOLATION_CASES = [
     ("wcc", "weighted", {"adaptive_partitions": False}, TypeError),
     ("core_numbers", "weighted", {"checkpoint_dir": "ckpt"}, TypeError),
     ("label_propagation_communities", "weighted", {"halt_file": "HALT"}, TypeError),
-    # callers that cache through the gear's registry without its window
+    # the PageRank family's power-iteration loop
+    ("pagerank", "directed", {"iterations": 2, "dangling": True}, None),
     ("eigenvector_centrality", "weighted", {"iterations": 2}, None),
     ("hits", "directed", {"iterations": 2}, None),
+    # an always-halt traversal that reaches its superstep cap with
+    # messages in flight raises instead of returning a partial answer
+    ("sssp", "path", {"source": 0, "max_supersteps": 2}, RuntimeError),
+    ("bfs", "path", {"source": 0, "max_supersteps": 2}, RuntimeError),
+    ("wcc", "path", {"max_supersteps": 1}, RuntimeError),
+    ("scc", "path", {"max_supersteps": 1}, RuntimeError),
+    # callers that cache through the gear's registry without its window
     ("betweenness_centrality", "weighted", {"pivots": [0]}, None),
     ("betweenness_centrality", "path", {"pivots": [0], "max_supersteps": 1}, RuntimeError),
     ("alternating_star_components", "weighted", {}, None),

@@ -2,8 +2,9 @@
 kernel parameter a Column, as sssp, bfs and wcc are) is built once, so
 from superstep 2 on a superstep builds no Column and makes the same py4j
 round trips; its ``~_has_msg`` seeding survives a resume; an always-halt
-run ends without the all-halted probe; and a nested gear leaves the exit
-``gc.collect()`` to the outermost one."""
+run ends without the all-halted probe; a nested gear leaves the exit
+``gc.collect()`` to the outermost one; and PageRank's fixed-length loop
+runs one job per round."""
 
 import gc
 import importlib
@@ -14,7 +15,7 @@ from pyspark.sql import functions as F
 from giraph_spark import Graph, PregelMetrics
 from giraph_spark.algos import components, paths
 from giraph_spark.algos.pagerank import pagerank
-from giraph_spark.pregel import resume_pregel
+from giraph_spark.pregel import request_halt, resume_pregel
 
 kernel = importlib.import_module("giraph_spark.pregel")
 
@@ -136,12 +137,23 @@ def test_resumed_sssp_matches_uninterrupted(spark, chain, tmp_path, monkeypatch)
     full = {r["id"]: r["distance"] for r in paths.sssp(chain, 0, metrics=full_m).collect()}
 
     ckpt = str(tmp_path / "ckpt")
-    # "crash" after superstep 3 (checkpoints committed at 1 and 3)
+    # halt after superstep 3 (checkpoints committed at 1 and 3): the halt
+    # request lands while superstep 3 runs, before its sentinel probe
+    consume = kernel._consume_halt_file
+    probes = []
+
+    def halt_in_superstep_3(spark_, path):
+        probes.append(path)
+        if len(probes) == 4:
+            request_halt(spark_, ckpt)
+        return consume(spark_, path)
+
+    monkeypatch.setattr(kernel, "_consume_halt_file", halt_in_superstep_3)
     cut_m = PregelMetrics()
     paths.sssp(
-        chain, 0, metrics=cut_m, max_supersteps=4,
-        state_checkpoint_dir=ckpt, checkpoint_every=2,
+        chain, 0, metrics=cut_m, state_checkpoint_dir=ckpt, checkpoint_every=2,
     )
+    monkeypatch.setattr(kernel, "_consume_halt_file", consume)
     # the same sssp kernel arguments, restarted from the checkpoint; the
     # patch is one-shot, as resume_pregel itself enters the kernel's pregel
     run = kernel.pregel
@@ -183,7 +195,8 @@ def _jobs_around_message_counts(spark, monkeypatch, run):
 def test_always_halt_run_makes_no_termination_probe(spark, chain, monkeypatch):
     """sssp votes to halt every superstep: its run is one edge count plus
     one message count per superstep, with no all-halted probe after the
-    last. PageRank's halt vote is its own, so its run keeps the probe."""
+    last. A program with a halt vote of its own (here a fixed-length
+    scatter whose last send is gated off) keeps the probe."""
     m = PregelMetrics()
     jobs, tail = _jobs_around_message_counts(
         spark, monkeypatch, lambda: paths.sssp(chain, 0, metrics=m)
@@ -192,9 +205,38 @@ def test_always_halt_run_makes_no_termination_probe(spark, chain, monkeypatch):
     assert (jobs, tail) == (1 + m.num_supersteps, 0)
 
     _, tail = _jobs_around_message_counts(
-        spark, monkeypatch, lambda: pagerank(chain, iterations=3)
+        spark,
+        monkeypatch,
+        lambda: kernel.pregel(
+            chain,
+            initial={"x": F.lit(1.0)},
+            update={"x": F.coalesce(F.col(kernel.MSG), F.col("x"))},
+            send_msg=lambda ctx: F.when(F.lit(ctx.superstep < 3), F.col("x")),
+            combine=F.sum,
+            msg_type="double",
+            vote_to_halt=lambda ctx: F.lit(ctx.superstep >= 3),
+        ),
     )
     assert tail == 1
+
+
+@pytest.mark.parametrize(
+    "dangling,jobs", [(False, 4), (True, 5)], ids=["plain", "dangling"]
+)
+def test_pagerank_runs_one_job_per_round(spark, chain, dangling, jobs):
+    """PageRank's fixed-length loop: one job counts the vertices and the
+    messages, then one job per round, and no halting probe; the dangling
+    variant adds one job for superstep 0's dangling mass. The superstep
+    rows are the Pregel form's: 0..3, the message count on each but the
+    last."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    m = PregelMetrics()
+    start = dag.nextJobId()
+    pagerank(chain, iterations=3, dangling=dangling, metrics=m)
+    assert dag.nextJobId() - start == jobs
+    assert [(s["superstep"], s["messages"]) for s in m.supersteps] == [
+        (0, 11), (1, 11), (2, 11), (3, 0)
+    ]
 
 
 def test_wcc_collects_garbage_once(spark, monkeypatch):
